@@ -357,25 +357,52 @@ def ivf_assign(vectors: DataFrame, n_cells: int = 8) -> DataFrame:
     )
 
 
+IVF_N_CELLS_PROP = "ivf_n_cells"
+
+
 def build_ivf_index(
     vectors: DataFrame, index_path: str, n_cells: int = 8
-):
+) -> int:
     """Materialize the IVF index: cell assignments + precomputed norms,
-    written as a versioned table PARTITIONED in storage by cell would be
-    the cluster layout; locally the table carries the cell column and
+    written as a native Delta table PARTITIONED in storage by cell would
+    be the cluster layout; locally the table carries the cell column and
     relies on predicate pushdown. Build cost is one pass; queries then
-    touch nprobe/n_cells of the data (`query_ivf_index`)."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    touch nprobe/n_cells of the data (`query_ivf_index`). Rebuilding at
+    an existing path overwrites it. Returns the committed version."""
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader, delta_writer
 
     assigned = ivf_assign(vectors, n_cells).withColumn(
         "norm", norm("embedding")
     )
-    table = VersionedTable(vectors.sparkSession, index_path)
-    # n_cells is INDEX state, not a query-time choice: persist it with
-    # the snapshot so queries cannot probe with a mismatched cell count
-    # (which would silently make some cells unreachable)
-    table.create(assigned, props={"ivf_n_cells": n_cells})
-    return table
+    if delta_reader.is_delta_table(index_path):
+        delta_writer.overwrite_delta(assigned, index_path)
+    else:
+        delta_writer.create_delta(assigned, index_path)
+    # n_cells is INDEX state, not a query-time choice: persist it as a
+    # table property so queries cannot probe with a mismatched cell
+    # count (which would silently make some cells unreachable)
+    return delta_writer.set_table_properties(
+        vectors.sparkSession, index_path, {IVF_N_CELLS_PROP: str(n_cells)}
+    )
+
+
+def _ivf_n_cells(spark: SparkSession, index_path: str) -> int:
+    """The cell count of the index's CURRENT metadata — a rebuild with
+    fewer cells wins over the count it replaced."""
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader
+
+    n_cells = None
+    if delta_reader.is_delta_table(index_path):
+        conf = delta_reader._replay(spark, index_path, None)[
+            "metaData"
+        ].get("configuration") or {}
+        n_cells = conf.get(IVF_N_CELLS_PROP)
+    if n_cells is None:
+        raise ValueError(
+            f"no {IVF_N_CELLS_PROP} property at {index_path} — not an "
+            "IVF index built by build_ivf_index"
+        )
+    return int(n_cells)
 
 
 def query_ivf_index(
@@ -389,21 +416,15 @@ def query_ivf_index(
     """Probe-path ANN query against a persisted IVF index: rank cells by
     centroid similarity (tiny driver-side list), scan only the nprobe
     best cells (pushed-down cell filter), brute-force within them.
-    ``n_cells`` is read from the index's snapshot props (persisted by
+    ``n_cells`` is read from the index's table property (persisted by
     ``build_ivf_index``) — a caller-supplied value could silently
     desynchronize from the stored assignment and make cells
     unreachable. ``exclude_vec_id`` drops a known row (e.g. the query
     vector itself when it came from the corpus) BEFORE the top-k cut."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader
 
-    table = VersionedTable(spark, index_path)
-    n_cells = table.latest_prop("ivf_n_cells")
-    if n_cells is None:
-        raise ValueError(
-            f"no ivf_n_cells prop at {index_path} — not an IVF index "
-            "built by build_ivf_index"
-        )
-    index = table.read()
+    n_cells = _ivf_n_cells(spark, index_path)
+    index = delta_reader.read_delta(spark, index_path)
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
     cents = index.filter(F.col("vec_id") < n_cells).select(
         "cell", F.col("embedding").alias("cv")
@@ -665,7 +686,7 @@ def l4_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def append_to_ivf_index(new_vectors: DataFrame, index_path: str):
+def append_to_ivf_index(new_vectors: DataFrame, index_path: str) -> int:
     """Incremental IVF maintenance: assign a batch of NEW vectors to
     the index's EXISTING centroids and append them — O(batch), never a
     rebuild. The ANN twin of ``incremental_neardup``: state is built
@@ -676,18 +697,13 @@ def append_to_ivf_index(new_vectors: DataFrame, index_path: str):
     service). New vec_ids must not collide with existing rows — a
     reused id would shadow a stored vector — so collisions raise
     (checked with one pushed-down id filter over the index; the id
-    list is batch-sized by construction)."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    list is batch-sized by construction). Returns the committed
+    version."""
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader, delta_writer
 
     spark = new_vectors.sparkSession
-    table = VersionedTable(spark, index_path)
-    n_cells = table.latest_prop("ivf_n_cells")
-    if n_cells is None:
-        raise ValueError(
-            f"no ivf_n_cells prop at {index_path} — not an IVF index "
-            "built by build_ivf_index"
-        )
-    index = table.read()
+    n_cells = _ivf_n_cells(spark, index_path)
+    index = delta_reader.read_delta(spark, index_path)
     new_ids = [r.vec_id for r in new_vectors.select("vec_id").collect()]
     if index.filter(F.col("vec_id").isin(new_ids)).limit(1).count():
         raise ValueError(
@@ -719,5 +735,4 @@ def append_to_ivf_index(new_vectors: DataFrame, index_path: str):
             norm("embedding").alias("norm"),
         )
     )
-    table.append(assigned)
-    return table
+    return delta_writer.append_delta(assigned, index_path)

@@ -1,10 +1,5 @@
 """Lakehouse table layer (SURVEY.md §2.2): DDL/DML, schema evolution,
-versioned writes, time travel."""
+versioned writes, time travel — over the jar-free native Delta and
+Iceberg stacks."""
 
-from dst_spark_k8_lakehouse_spark.plans import ddl, dml, table  # noqa: F401
-from dst_spark_k8_lakehouse_spark.plans.delta_backend import (  # noqa: F401
-    DeltaBackedTable,
-    delta_available,
-    open_table,
-)
-from dst_spark_k8_lakehouse_spark.plans.table import VersionedTable  # noqa: F401
+from dst_spark_k8_lakehouse_spark.plans import ddl, dml  # noqa: F401

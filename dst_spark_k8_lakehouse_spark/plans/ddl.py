@@ -6,10 +6,9 @@ Spark executes with identical syntax — this module is a thin, explicit
 wrapper so the capability surface is enumerable and testable.
 
 Statements whose reference form needs format jars (row-level DML, time
-travel, VACUUM, RENAME COLUMN) route to ``plans.table.VersionedTable``,
-which reproduces their semantics over plain parquet; with delta-spark
-installed (``session._lakehouse_extensions``) the same calls can target
-Delta tables unchanged.
+travel, VACUUM, RENAME COLUMN) run against native Delta / Iceberg
+tables instead: ``plans.dml.execute_native_sql`` takes their statement
+text, ``delta_reader.read_delta(version=)`` time-travels.
 """
 
 from __future__ import annotations
@@ -159,8 +158,9 @@ def insert_overwrite(spark: SparkSession, name: str, select_sql: str) -> None:
     Semantic diff vs the reference: on plain parquet tables Spark
     rejects an overwrite whose SELECT reads the target table
     (UNSUPPORTED_OVERWRITE — no snapshot isolation); Delta/Iceberg allow
-    it. Self-referencing rewrites route through
-    ``VersionedTable.update``/``overwrite``, which snapshot first."""
+    it. Self-referencing rewrites run on a native Delta table instead
+    (``delta_dml.update_delta`` / ``delta_writer.overwrite_delta``),
+    which read a committed version first."""
     spark.sql(f"INSERT OVERWRITE TABLE {name} {select_sql}")
 
 

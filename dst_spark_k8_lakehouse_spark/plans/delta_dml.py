@@ -30,8 +30,8 @@ column still raises (it would move rows across files under a
 fixed-partition rewrite; route such changes through MERGE, which
 re-partitions).
 
-API mirrors ``VersionedTable.update/delete/merge`` (plans/table.py) so
-``plans/dml.execute_dml`` statement routing works on both backends.
+``plans/dml.execute_native_sql`` routes the UPDATE / DELETE / MERGE
+statement text onto these calls (and onto ``iceberg_dml``'s twins).
 """
 
 from __future__ import annotations

@@ -1,15 +1,13 @@
 """Read-only Delta Lake table reader — pure Python over the PUBLIC
 Delta transaction-log protocol (no jars).
 
-The one gap the container forces (``delta-spark`` uninstallable, see
-``delta_backend.py``) splits in two: WRITING Delta needs the native
-commit protocol (jar), but READING only needs the documented log
-format (delta.io protocol spec, PROTOCOL.md: JSON commit files under
-``_delta_log/`` containing ``metaData`` / ``add`` / ``remove`` /
-``protocol`` actions, plus optional parquet checkpoints referenced by
-``_last_checkpoint``). A reference user pointing this engine at a
-Delta table written by their existing Delta 3.x pipeline can SELECT
-from it — including time travel — with no Delta runtime:
+No ``delta-spark`` runtime is needed: READING only needs the
+documented log format (delta.io protocol spec, PROTOCOL.md: JSON
+commit files under ``_delta_log/`` containing ``metaData`` / ``add`` /
+``remove`` / ``protocol`` actions, plus optional parquet checkpoints
+referenced by ``_last_checkpoint``). A reference user pointing this
+engine at a Delta table written by their existing Delta 3.x pipeline
+can SELECT from it — including time travel — with no Delta runtime:
 
 - the log is replayed in version order (checkpoint first when
   present), keeping the last ``metaData`` and the add-minus-remove
@@ -39,8 +37,8 @@ from it — including time travel — with no Delta runtime:
   against ``delta.columnMapping.id`` (Spark's field-id resolution),
   with a loud guard when the files carry no ids.
 
-Write paths still raise toward ``VersionedTable`` / the jar-guarded
-backend; this module never mutates ``_delta_log``.
+Writes go through ``delta_writer`` / ``delta_dml``; this module never
+mutates ``_delta_log``.
 
 DELETION VECTORS (the protocol's merge-on-read deletes, reader
 feature ``deletionVectors``) are applied: each vectored add's bitmap
@@ -355,7 +353,11 @@ def _replay(
         _flush_tail(state, buf)
     if version is not None:
         available = [v for v, _ in commits]
-        if not seen_any or (available and version < available[0] and start == 0):
+        if (
+            not seen_any
+            or version > state["version"]  # not committed (yet)
+            or (available and version < available[0] and start == 0)
+        ):
             raise ValueError(
                 f"version {version} not available at {path} "
                 f"(commits: {available[:3]}…)"

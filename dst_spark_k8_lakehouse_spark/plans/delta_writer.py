@@ -42,9 +42,10 @@ recompute their remove set on retry. Data files are uniquely named so
 an abandoned attempt leaves garbage, never corruption.
 
 Type mapping covers the engine's scalar surface (long/int/double/
-float/string/boolean/date/timestamp/decimal/binary + arrays); an
+float/string/boolean/date/timestamp/decimal/binary) plus the nested
+array / map / struct types in the protocol's schema serialization; an
 unmapped type raises rather than writing a schemaString real Delta
-would reject.
+would reject. Per-file ``stats`` cover top-level leaves only.
 """
 
 from __future__ import annotations
@@ -68,6 +69,12 @@ _MAX_COMMIT_RETRIES = 10
 
 
 def _delta_type(dt: T.DataType) -> Any:
+    """Spark type → the protocol's schema serialization. Nested types
+    are written NULLABLE (array elements, map values, struct fields),
+    like real Delta's DataFrame writes (``schema.asNullable``): two
+    frames with the same column types but different nested
+    nullability then append to one table. Top-level ``nullable`` is
+    the caller's (``_field_json``)."""
     simple = {
         T.LongType: "long", T.IntegerType: "integer",
         T.ShortType: "short", T.ByteType: "byte",
@@ -85,7 +92,22 @@ def _delta_type(dt: T.DataType) -> Any:
         return {
             "type": "array",
             "elementType": _delta_type(dt.elementType),
-            "containsNull": dt.containsNull,
+            "containsNull": True,
+        }
+    if isinstance(dt, T.MapType):
+        return {
+            "type": "map",
+            "keyType": _delta_type(dt.keyType),
+            "valueType": _delta_type(dt.valueType),
+            "valueContainsNull": True,
+        }
+    if isinstance(dt, T.StructType):
+        return {
+            "type": "struct",
+            "fields": [
+                _field_json(T.StructField(f.name, f.dataType))
+                for f in dt.fields
+            ],
         }
     raise NotImplementedError(f"no Delta schema mapping for {dt}")
 
@@ -171,7 +193,7 @@ def _file_stats_json(path: str) -> str | None:
             col = md.row_group(rg).column(ci)
             name = col.path_in_schema
             if "." in name:
-                continue  # nested: out of scope
+                continue  # nested leaf: no stats, file never skipped
             st = col.statistics
             lo = hi = None
             if st is not None and st.has_min_max:
@@ -924,7 +946,8 @@ def _reconcile_schema(
 
     mismatched = sorted(
         n for n, dt in df_types.items()
-        if n in by_name and by_name[n].dataType != dt
+        if n in by_name
+        and _delta_type(by_name[n].dataType) != _delta_type(dt)
     )
     if mismatched:
         detail = {
@@ -2193,7 +2216,7 @@ def zorder_delta(
     """``OPTIMIZE t ZORDER BY (cols…)`` on a NATIVE log: rewrite each
     partition group clustered on the interleaved-bit order of
     ``cols`` (the shared quantile-bucket kernel,
-    ``plans.table.zorder_cluster`` — one range shuffle per group, no
+    ``plans.zorder.zorder_cluster`` — one range shuffle per group, no
     global raw-value sort), committing ``remove``+``add`` with
     ``dataChange: false`` like any OPTIMIZE: a pure reorganization
     streams and time travel see through, after which a selective
@@ -2202,7 +2225,7 @@ def zorder_delta(
     group). Refuses over live deletion vectors (materialize first)
     and column-mapped tables. Returns the committed version."""
     from dst_spark_k8_lakehouse_spark.plans import delta_rowtracking
-    from dst_spark_k8_lakehouse_spark.plans.table import zorder_cluster
+    from dst_spark_k8_lakehouse_spark.plans.zorder import zorder_cluster
 
     state = delta_reader._replay(spark, table, None)
     meta = state["metaData"]
@@ -2821,7 +2844,7 @@ def cluster_delta(
     feature; real Delta's ``OPTIMIZE`` on a ``CLUSTER BY`` table):
     rewrite ONLY the files not yet carrying the clustered tag for the
     CURRENT clustering columns, through the shared interleaved-bit
-    kernel (``plans.table.zorder_cluster``), and tag the output. Files
+    kernel (``plans.zorder.zorder_cluster``), and tag the output. Files
     already clustered are untouched — each maintenance run costs
     O(new data), not O(table), which is what makes a nightly layout
     job feasible at 100 TB where a full ZORDER rewrite is not.
@@ -2834,7 +2857,7 @@ def cluster_delta(
     Returns the committed version, or the current version unchanged
     when nothing needs clustering."""
     from dst_spark_k8_lakehouse_spark.plans import delta_rowtracking
-    from dst_spark_k8_lakehouse_spark.plans.table import zorder_cluster
+    from dst_spark_k8_lakehouse_spark.plans.zorder import zorder_cluster
 
     state = delta_reader._replay(spark, table, None)
     cols = clustering_columns(state)

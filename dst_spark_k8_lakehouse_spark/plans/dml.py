@@ -1,13 +1,14 @@
-"""SQL-string DML entry points over the versioned table layer.
+"""SQL-string statement surface over the native table formats.
 
-The reference's notebooks speak SQL DML against Iceberg/Delta tables
+The reference's notebooks speak SQL against Iceberg/Delta tables
 (``UPDATE`` / ``DELETE``, ``02_iceberg_demo.ipynb:91,103``; upserts in
-the Delta demo). Without those format jars, the same statements have no
-executable home in vanilla Spark — parquet tables reject row-level DML.
-This module is the thin parser shim that keeps API parity honest: the
-statement text a reference user already has dispatches onto
-``VersionedTable.update`` / ``.delete`` / ``.merge``, which reproduce
-the semantics as copy-on-write snapshots.
+the Delta demo; CREATE / INSERT / OPTIMIZE / VACUUM / ALTER TABLE).
+Without those format jars the same statements have no executable home
+in vanilla Spark. ``execute_native_sql`` (writes) and
+``query_native_sql`` (reads) keep API parity honest: the statement
+text a reference user already has dispatches onto the jar-free native
+Delta (``delta_writer`` / ``delta_dml``) or Iceberg (``iceberg_writer``
+/ ``iceberg_dml``) implementation, detected per table directory.
 
 Deliberately a shim, not a SQL frontend: expressions inside SET /
 WHERE / ON travel VERBATIM into the DataFrame layer (Spark parses
@@ -23,8 +24,6 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from dst_spark_k8_lakehouse_spark.plans.table import VersionedTable
 
 _UPDATE_RE = re.compile(
     r"^\s*UPDATE\s+(?P<table>[\w.]+)\s+SET\s+(?P<rest>.+)$",
@@ -170,7 +169,7 @@ def _sql_literal(text: str):
 def _merge_keys(on_clause: str, aliases: set[str]) -> list[str]:
     """Equality-conjunct ON clause → merge key column list. Each
     conjunct must be ``a.k = b.k`` (or unqualified) on the SAME column
-    name — the only shape ``VersionedTable.merge`` expresses."""
+    name — the only shape the native ``merge_*`` calls express."""
     keys: list[str] = []
     for conj in re.split(r"\s+AND\s+", on_clause, flags=re.IGNORECASE):
         m = _ON_EQ_RE.match(conj)
@@ -187,82 +186,6 @@ def _merge_keys(on_clause: str, aliases: set[str]) -> list[str]:
             )
         keys.append(c1)
     return keys
-
-
-def execute_dml(
-    sql: str,
-    tables: dict[str, VersionedTable],
-    sources: dict[str, DataFrame] | None = None,
-) -> int:
-    """Execute one UPDATE / DELETE / MERGE statement against versioned
-    tables. ``tables`` maps statement table names to ``VersionedTable``
-    instances (the catalog shim); MERGE sources resolve from
-    ``sources`` first, then from ``tables`` (reading their latest
-    snapshot). Returns the new snapshot version.
-
-    Supported skeletons (expressions inside pass to Spark verbatim):
-
-    - ``UPDATE t SET c = expr[, ...] [WHERE cond]``
-    - ``DELETE FROM t [WHERE cond]``
-    - ``MERGE INTO t [AS a] USING s [AS b] ON a.k = b.k [AND ...]
-      [WHEN MATCHED THEN UPDATE SET *]
-      [WHEN NOT MATCHED THEN INSERT *]``
-      (whole-row actions, matching Delta's ``UPDATE SET *`` /
-      ``INSERT *`` shorthand; at least one WHEN clause required)
-    """
-
-    def _table(name: str) -> VersionedTable:
-        if name not in tables:
-            raise ValueError(f"unknown table {name!r}; have {sorted(tables)}")
-        return tables[name]
-
-    sql = sql.strip().rstrip(";").strip()
-    if m := _UPDATE_RE.match(sql):
-        set_clause, where = _split_top_keyword(m["rest"], "WHERE")
-        return _table(m["table"]).update(
-            where or "true", _split_assignments(set_clause)
-        )
-    if m := _DELETE_RE.match(sql):
-        before, where = _split_top_keyword(m["rest"], "WHERE")
-        if before.strip():
-            raise ValueError(
-                f"unexpected text after DELETE FROM table: {before.strip()!r}"
-            )
-        return _table(m["table"]).delete(where or "true")
-    if m := _MERGE_RE.match(sql):
-        target = _table(m["target"])
-        src_name = m["source"]
-        if sources and src_name in sources:
-            source = sources[src_name]
-        else:
-            source = _table(src_name).read()
-        aliases = {
-            a
-            for a in (
-                m["talias"] or m["target"],
-                m["salias"] or m["source"],
-            )
-        }
-        on_clause, when = _split_top_keyword(m["rest"], "WHEN")
-        if when is None:
-            raise ValueError("MERGE needs at least one WHEN clause")
-        when = "WHEN" + when
-        update_matched = bool(_MATCHED_RE.search(when))
-        insert_unmatched = bool(_NOT_MATCHED_RE.search(when))
-        recognized = _MATCHED_RE.sub("", _NOT_MATCHED_RE.sub("", when))
-        if recognized.strip():
-            raise ValueError(
-                f"unsupported MERGE WHEN clause(s): {recognized.strip()!r}"
-            )
-        if not (update_matched or insert_unmatched):
-            raise ValueError("MERGE needs at least one WHEN clause")
-        return target.merge(
-            source,
-            on=_merge_keys(on_clause, aliases),
-            update_when_matched=update_matched,
-            insert_when_not_matched=insert_unmatched,
-        )
-    raise ValueError(f"not a supported DML statement: {sql.strip()[:80]!r}")
 
 
 # ------------------------------------------------- native-table SQL
@@ -443,10 +366,9 @@ def execute_native_sql(
     onto NATIVE-format tables (jar-free): ``tables`` maps statement
     names to table DIRECTORIES; the format (Delta log vs Iceberg
     metadata) is detected per table and the call dispatches to the
-    matching native implementation. Same shim philosophy as
-    ``execute_dml``: only the statement SKELETON is parsed here;
-    expressions travel verbatim to Spark, and unrecognized shapes
-    raise instead of mis-executing.
+    matching native implementation. Only the statement SKELETON is
+    parsed here; expressions travel verbatim to Spark, and
+    unrecognized shapes raise instead of mis-executing.
 
     Supported: UPDATE / DELETE / MERGE (both formats, copy-on-write),
     ``VACUUM t [RETAIN k VERSIONS]`` (Delta vacuum / Iceberg

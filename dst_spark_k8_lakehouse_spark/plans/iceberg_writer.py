@@ -2368,7 +2368,7 @@ def rewrite_data_files(
         bare source columns ascending, so metadata promised a layout
         the data never took,
       - ``"zorder(a, b)"`` → the shared Z-ORDER kernel
-        (``plans.table.zorder_cluster`` — the same engine D15/D35 use
+        (``plans.zorder.zorder_cluster`` — the same engine D15/D35 use
         on the Delta side), multi-dimensional clustering,
       - ``[terms]`` / ``"term, term"`` → each term in the full
         ``set_sort_order`` spelling (``"col"``, ``"days(ts) DESC"``,
@@ -2384,7 +2384,7 @@ def rewrite_data_files(
     Delta side since r7, now mirrored for Iceberg)."""
     import re as _re
 
-    from dst_spark_k8_lakehouse_spark.plans.table import zorder_cluster
+    from dst_spark_k8_lakehouse_spark.plans.zorder import zorder_cluster
 
     meta, _v = _load_meta(table)
     fields: list[dict] = []

@@ -1,11 +1,12 @@
 """Driver-channel queries for the lakehouse layer (D10-D12).
 
-The versioned-table semantics (copy-on-write DML, time travel) were
-previously pytest-only evidence; each query here drives the full
-stack — create a table from a fixture, mutate it through the SQL DML
-shim, read a version back — and returns a result the DuckDB oracle
-computes directly from the fixture, so the driver value-checks the
-whole write path, not just "it ran".
+The table semantics (copy-on-write DML, time travel) were previously
+pytest-only evidence; each query here drives the full native-Delta
+stack — create a table from a fixture, mutate it through the SQL
+statement surface (``dml.execute_native_sql``), read a version back —
+and returns a result the DuckDB oracle computes directly from the
+fixture, so the driver value-checks the whole write path, not just
+"it ran".
 
 Tables are built per call in a temp directory (cleaned at process
 exit — the returned DataFrame stays lazily readable until then, like
@@ -18,22 +19,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dst_spark_k8_lakehouse_spark import localrel
-from dst_spark_k8_lakehouse_spark.plans.dml import execute_dml
-from dst_spark_k8_lakehouse_spark.plans.table import VersionedTable
+from dst_spark_k8_lakehouse_spark.plans import delta_reader, delta_writer
+from dst_spark_k8_lakehouse_spark.plans.dml import execute_native_sql
 from dst_spark_k8_lakehouse_spark.registry import query
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
 
-def _temp_table(spark: SparkSession, df: DataFrame) -> VersionedTable:
+def _temp_table(df: DataFrame) -> str:
+    """CTAS ``df`` into a fresh native Delta table; returns its path."""
     import atexit
+    import os
     import shutil
     import tempfile
 
-    path = tempfile.mkdtemp(prefix="dst-lakehouse-q-")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    t = VersionedTable(spark, path)
-    t.create(df)
-    return t
+    base = tempfile.mkdtemp(prefix="dst-lakehouse-q-")
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    path = os.path.join(base, "t")
+    delta_writer.create_delta(df, path)
+    return path
 
 
 @query(
@@ -48,16 +51,17 @@ def _temp_table(spark: SparkSession, df: DataFrame) -> VersionedTable:
 )
 def d10_update_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10 end-to-end: CTAS from the customer fixture, the reference's
-    UPDATE statement text through the DML shim (copy-on-write
-    snapshot), read back — every row value-checked against the oracle
-    computing the same mutation relationally."""
-    t = _temp_table(spark, load_table(spark, sf_dir, "customer"))
-    execute_dml(
+    UPDATE statement text through the native SQL surface (copy-on-
+    write commit), read back — every row value-checked against the
+    oracle computing the same mutation relationally."""
+    t = _temp_table(load_table(spark, sf_dir, "customer"))
+    execute_native_sql(
+        spark,
         "UPDATE t SET c_acctbal = c_acctbal * 2 "
         "WHERE c_mktsegment = 'BUILDING'",
         {"t": t},
     )
-    return t.read().select(
+    return delta_reader.read_delta(spark, t).select(
         "c_custkey", F.round("c_acctbal", 2).alias("bal")
     )
 
@@ -70,11 +74,15 @@ def d10_update_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d11_delete_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D11 end-to-end: DELETE statement text → anti-filter rewrite →
-    read back; surviving keys value-checked."""
-    t = _temp_table(spark, load_table(spark, sf_dir, "customer"))
-    execute_dml("DELETE FROM t WHERE c_mktsegment = 'MACHINERY'", {"t": t})
-    return t.read().select("c_custkey", "c_mktsegment")
+    """D11 end-to-end: DELETE statement text → copy-on-write file
+    rewrite → read back; surviving keys value-checked."""
+    t = _temp_table(load_table(spark, sf_dir, "customer"))
+    execute_native_sql(
+        spark, "DELETE FROM t WHERE c_mktsegment = 'MACHINERY'", {"t": t}
+    )
+    return delta_reader.read_delta(spark, t).select(
+        "c_custkey", "c_mktsegment"
+    )
 
 
 @query(
@@ -90,20 +98,26 @@ def d11_delete_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d12_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D12 end-to-end: create → append (doubling) → overwrite (filter)
-    builds three snapshots; every historical version must still read
-    exactly — including after later snapshots were committed. The four
-    counts are all oracle-derivable from the fixture."""
+    builds three log versions; every historical version must still
+    read exactly — including after later versions were committed. The
+    four counts are all oracle-derivable from the fixture."""
     cust = load_table(spark, sf_dir, "customer")
-    t = _temp_table(spark, cust)          # v0: fixture
-    t.append(cust)                        # v1: doubled
-    t.overwrite(cust.filter(F.col("c_acctbal") > 0))  # v2: filtered
+    t = _temp_table(cust)                 # v0: fixture
+    delta_writer.append_delta(cust, t)    # v1: doubled
+    delta_writer.overwrite_delta(         # v2: filtered
+        cust.filter(F.col("c_acctbal") > 0), t
+    )
     counts = [
-        t.read(version=v).agg(F.count("*").alias(n))
+        delta_reader.read_delta(spark, t, version=v).agg(
+            F.count("*").alias(n)
+        )
         for v, n in ((0, "v0_rows"), (1, "v1_rows"), (2, "v2_rows"))
     ]
     # read v1 AGAIN after v2 exists: time travel must be stable, not
     # a latest-state alias
-    again = t.read(version=1).agg(F.count("*").alias("v1_rows_after"))
+    again = delta_reader.read_delta(spark, t, version=1).agg(
+        F.count("*").alias("v1_rows_after")
+    )
     out = counts[0]
     for df in (*counts[1:], again):
         out = out.crossJoin(df)
@@ -128,7 +142,7 @@ def d13_merge_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     statement text; matched rows replaced, unmatched inserted, result
     value-checked."""
     cust = load_table(spark, sf_dir, "customer")
-    t = _temp_table(spark, cust)
+    t = _temp_table(cust)
     modified = cust.filter(F.col("c_custkey") % 7 == 0).withColumn(
         "c_acctbal", F.col("c_acctbal") + 1000
     )
@@ -142,14 +156,15 @@ def d13_merge_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("NEW").alias("c_mktsegment"),
         )
     )
-    execute_dml(
+    execute_native_sql(
+        spark,
         """MERGE INTO t USING s ON t.c_custkey = s.c_custkey
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *""",
         {"t": t},
         sources={"s": modified.unionByName(new_row)},
     )
-    return t.read().select(
+    return delta_reader.read_delta(spark, t).select(
         "c_custkey", F.round("c_acctbal", 2).alias("bal")
     )
 
@@ -631,11 +646,13 @@ def d15_zorder_preserves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE ZORDER BY end-to-end: the clustered rewrite must be a
     pure reorganization — every row survives byte-identically. The
     clustering property itself (per-file min/max spans) is asserted by
-    ``test_zorder_clusters_both_dimensions``; this query puts the
+    ``test_zorder_native_tightens_both_dimensions``; this query puts the
     no-data-change contract in the driver channel."""
-    t = _temp_table(spark, load_table(spark, sf_dir, "customer"))
-    v = t.zorder(["c_nationkey", "c_acctbal"], n_files=4)
-    return t.read(v).select(
+    t = _temp_table(load_table(spark, sf_dir, "customer"))
+    v = delta_writer.zorder_delta(
+        spark, t, ["c_nationkey", "c_acctbal"], n_files=4
+    )
+    return delta_reader.read_delta(spark, t, version=v).select(
         "c_custkey", "c_nationkey", F.round("c_acctbal", 2).alias("bal")
     )
 

@@ -55,6 +55,16 @@ def query(query_id: str, oracle: str | None = None) -> Callable[[F], F]:
 # ids whose only green row is the oldest (round 1). Rotation log with
 # last-green round per id lives in COVERAGE.md.
 PRIORITY: list[str] = [
+    # ---- table-layer consolidation (the parquet-manifest table and its
+    # SQL router retired onto the native Delta stack): every id whose
+    # write/read path moved to delta_writer / delta_reader /
+    # execute_native_sql, plus the only id that builds the IVF index.
+    "d10_update_sql",
+    "d11_delete_sql",
+    "d12_time_travel",
+    "d13_merge_sql",
+    "d15_zorder_preserves",
+    "l4_ann_ivf_probe",
     # ---- r13 rotation (VERDICT r12 item 2 — the written r13 front,
     # derived from the actual last-green map over CORRECTNESS_r*.json,
     # not the stale r12 comment the judge flagged).

@@ -692,9 +692,14 @@ class _DeltaWriter(DataSourceArrowWriter):
                 f"schema {expected} (use delta_writer.append_delta("
                 "merge_schema=True) to evolve the table)"
             )
+        from dst_spark_k8_lakehouse_spark.plans.delta_writer import (
+            _delta_type,
+        )
+
         for f in df_schema.fields:
             t = table_schema[f.name].dataType
-            if f.dataType != t:
+            # compared as serialized: nested nullability is not a type
+            if _delta_type(f.dataType) != _delta_type(t):
                 raise ValueError(
                     f"column {f.name!r} type {f.dataType.simpleString()} "
                     f"!= table type {t.simpleString()}"

@@ -568,53 +568,6 @@ def foreach_batch_append(
     q.awaitTermination()
 
 
-def write_stream_batch_to_table(
-    batch_df: DataFrame, batch_id: int, table_path: str
-) -> bool:
-    """Idempotent ``foreachBatch`` body for the versioned table sink:
-    the snapshot commit records ``stream_batch_id`` (the analog of
-    Delta's ``txn`` action), and a batch whose id is already committed
-    is skipped — so a retry after a crash between the table commit and
-    the checkpoint commit does not produce a duplicate snapshot.
-    Returns True if the batch was written, False if skipped."""
-    import os
-
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
-
-    table = VersionedTable(batch_df.sparkSession, table_path)
-    props = {"stream_batch_id": batch_id}
-    if os.path.exists(table._manifest_path()):
-        if batch_id in table.committed_props("stream_batch_id"):
-            return False
-        table.append(batch_df, props)
-    else:
-        table.create(batch_df, props)
-    return True
-
-
-def foreach_batch_to_table(
-    df: DataFrame, table_path: str, checkpoint_dir: str
-) -> None:
-    """T-sink: ``foreachBatch`` into the versioned lakehouse layer —
-    each micro-batch becomes one time-travellable table snapshot
-    (append, schema-merging). Effectively-once end to end: the
-    checkpoint skips batches the stream knows are done, and
-    ``write_stream_batch_to_table`` skips batches the TABLE knows are
-    done (snapshot-recorded ``stream_batch_id``), covering the
-    crash-between-sink-commit-and-checkpoint-commit window."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_stream_batch_to_table(batch_df, batch_id, table_path)
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 @query(
     "t6_stream_to_delta",
     oracle="""

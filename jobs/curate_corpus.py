@@ -37,7 +37,10 @@ from dst_spark_k8_lakehouse_spark.llm import (  # noqa: E402
     dedup,
 )
 from dst_spark_k8_lakehouse_spark.metrics import MetricContext  # noqa: E402
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable  # noqa: E402
+from dst_spark_k8_lakehouse_spark.plans import (  # noqa: E402
+    delta_reader,
+    delta_writer,
+)
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table  # noqa: E402
 
 
@@ -86,6 +89,16 @@ def neardup_dedup(
     return kept, sigs.join(
         kept.select("doc_id"), "doc_id", "left_semi"
     )
+
+
+def _write_state(df: DataFrame, path: str) -> None:
+    """Publish a gold/state table as native Delta: CTAS on the first
+    run, one overwrite commit on a re-run (earlier runs stay
+    time-travellable)."""
+    if delta_reader.is_delta_table(path):
+        delta_writer.overwrite_delta(df, path)
+    else:
+        delta_writer.create_delta(df, path)
 
 
 def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
@@ -146,13 +159,15 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
         clean = gold.join(drop_ids, "doc_id", "left_anti")
         log(3, "contaminated_removed", drop_ids.count())
 
-        gold_table = VersionedTable(spark, f"{out_dir}/corpus")
-        gold_table.create(clean)
-        VersionedTable(spark, f"{out_dir}/signatures").create(
+        _write_state(clean, f"{out_dir}/corpus")
+        _write_state(
             sigs.join(clean.select("doc_id"), "doc_id", "left_semi")
-            .withColumn("sig_v", F.lit(dedup.SIG_VERSION))
+            .withColumn("sig_v", F.lit(dedup.SIG_VERSION)),
+            f"{out_dir}/signatures",
         )
-        log(3, "gold_docs", gold_table.read().count())
+        log(3, "gold_docs", delta_reader.read_delta(
+            spark, f"{out_dir}/corpus"
+        ).count())
 
         manifest = curation.mixture_epochs(clean, curation.MIXTURE_MILLI)
         manifest.write.mode("overwrite").parquet(

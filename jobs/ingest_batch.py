@@ -30,7 +30,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from dst_spark_k8_lakehouse_spark import get_session  # noqa: E402
 from dst_spark_k8_lakehouse_spark.llm import dedup  # noqa: E402
 from dst_spark_k8_lakehouse_spark.metrics import MetricContext  # noqa: E402
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable  # noqa: E402
+from dst_spark_k8_lakehouse_spark.plans import (  # noqa: E402
+    delta_reader,
+    delta_writer,
+)
 from jobs.curate_corpus import quality_gate  # noqa: E402
 
 
@@ -103,19 +106,21 @@ def run(
     threshold: float = 0.7,
 ) -> dict[str, int]:
     """Ingest ``batch`` against the state under ``state_dir`` (written
-    by curate_corpus: ``corpus`` + ``signatures`` tables; a ``hashes``
-    table is bootstrapped on first run). Returns per-layer counts."""
+    by curate_corpus: ``corpus`` + ``signatures`` native Delta tables; a
+    ``hashes`` table is bootstrapped on first run). Returns per-layer
+    counts."""
     counts: dict[str, int] = {}
-    corpus_t = VersionedTable(spark, f"{state_dir}/corpus")
-    sigs_t = VersionedTable(spark, f"{state_dir}/signatures")
-    hashes_t = VersionedTable(spark, f"{state_dir}/hashes")
+    corpus_t = f"{state_dir}/corpus"
+    sigs_t = f"{state_dir}/signatures"
+    hashes_t = f"{state_dir}/hashes"
 
-    import os
+    if not delta_reader.is_delta_table(hashes_t):
+        delta_writer.create_delta(
+            bootstrap_hashes(delta_reader.read_delta(spark, corpus_t)),
+            hashes_t,
+        )
 
-    if not os.path.exists(hashes_t._manifest_path()):
-        hashes_t.create(bootstrap_hashes(corpus_t.read()))
-
-    existing_sigs = sigs_t.read()
+    existing_sigs = delta_reader.read_delta(spark, sigs_t)
     # refuse state from an incompatible signature family (the r5
     # minhash-modulus fix changed every signature value; a band-join
     # against old state would SILENTLY match nothing and admit dups)
@@ -161,7 +166,9 @@ def run(
         gated = quality_gate(batch)
         # content_hash rides along to the hashes-table append — the
         # text is already hashed once in the exact-dedup pass
-        exact = exact_dedup_incremental(gated, hashes_t.read())
+        exact = exact_dedup_incremental(
+            gated, delta_reader.read_delta(spark, hashes_t)
+        )
         log(2, "batch_after_exact", exact.count())
 
         pairs, new_sigs = dedup.incremental_neardup(
@@ -178,12 +185,15 @@ def run(
         )
         log(3, "batch_ingested", survivors.count())
 
-        corpus_t.append(survivors.drop("content_hash"))
-        sigs_t.append(
+        delta_writer.append_delta(survivors.drop("content_hash"), corpus_t)
+        delta_writer.append_delta(
             new_sigs.join(survivors.select("doc_id"), "doc_id", "left_semi")
-            .withColumn("sig_v", F.lit(dedup.SIG_VERSION))
+            .withColumn("sig_v", F.lit(dedup.SIG_VERSION)),
+            sigs_t,
         )
-        hashes_t.append(survivors.select("doc_id", "content_hash"))
+        delta_writer.append_delta(
+            survivors.select("doc_id", "content_hash"), hashes_t
+        )
     return counts
 
 

@@ -48,7 +48,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from dst_spark_k8_lakehouse_spark import get_session  # noqa: E402
 from dst_spark_k8_lakehouse_spark.llm import dedup  # noqa: E402
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable  # noqa: E402
+from dst_spark_k8_lakehouse_spark.plans import (  # noqa: E402
+    delta_reader,
+    delta_writer,
+)
 from jobs.ingest_batch import bootstrap_hashes  # noqa: E402
 from jobs.ingest_batch import run as ingest_run  # noqa: E402
 
@@ -68,27 +71,27 @@ def _reconcile_state(spark: SparkSession, state_dir: str) -> None:
     and signature state rows for any corpus doc missing them. No-op on
     a clean state; O(missing docs) otherwise — state is always
     recoverable from corpus text because ingest appends corpus FIRST."""
-    import os
-
-    corpus_t = VersionedTable(spark, f"{state_dir}/corpus")
-    hashes_t = VersionedTable(spark, f"{state_dir}/hashes")
-    sigs_t = VersionedTable(spark, f"{state_dir}/signatures")
-    if not os.path.exists(hashes_t._manifest_path()):
+    hashes_t = f"{state_dir}/hashes"
+    sigs_t = f"{state_dir}/signatures"
+    if not delta_reader.is_delta_table(hashes_t):
         return  # first ingest bootstraps hashes itself
-    corpus = corpus_t.read()
+    corpus = delta_reader.read_delta(spark, f"{state_dir}/corpus")
     missing_h = corpus.join(
-        hashes_t.read().select("doc_id"), "doc_id", "left_anti"
+        delta_reader.read_delta(spark, hashes_t).select("doc_id"),
+        "doc_id", "left_anti",
     )
     if missing_h.limit(1).count():
-        hashes_t.append(bootstrap_hashes(missing_h))
+        delta_writer.append_delta(bootstrap_hashes(missing_h), hashes_t)
     missing_s = corpus.join(
-        sigs_t.read().select("doc_id"), "doc_id", "left_anti"
+        delta_reader.read_delta(spark, sigs_t).select("doc_id"),
+        "doc_id", "left_anti",
     )
     if missing_s.limit(1).count():
-        sigs_t.append(
+        delta_writer.append_delta(
             dedup.signature_table(missing_s, spread=False).withColumn(
                 "sig_v", F.lit(dedup.SIG_VERSION)
-            )
+            ),
+            sigs_t,
         )
 
 

@@ -187,17 +187,3 @@ def test_checkpoint_replay(spark, delta_table):
 
     rows = {(r.id, r.part) for r in dr.read_delta(spark, delta_table).collect()}
     assert rows == {(1, 10), (2, 10), (4, 10)}  # v2 remove applied
-
-
-def test_open_table_refuses_delta_without_runtime(spark, delta_table):
-    from dst_spark_k8_lakehouse_spark.plans.delta_backend import (
-        delta_available,
-        open_table,
-        read_existing_delta,
-    )
-
-    if delta_available():
-        pytest.skip("delta runtime present; refusal path not reachable")
-    with pytest.raises(ValueError, match="read_existing_delta"):
-        open_table(spark, delta_table)
-    assert read_existing_delta(spark, delta_table).count() == 3

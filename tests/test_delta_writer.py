@@ -73,11 +73,57 @@ def test_append_schema_mismatch_refused(spark, tmp_path):
 
 
 def test_writer_output_readable_by_versioned_surface(spark, tmp_path):
-    """read_existing_delta (the public entry) consumes writer output."""
-    from dst_spark_k8_lakehouse_spark.plans.delta_backend import (
-        read_existing_delta,
-    )
-
+    """read_delta (the public entry) consumes writer output at every
+    committed version, and refuses one that was never committed."""
     table = str(tmp_path / "surf")
     dw.create_delta(spark.range(4), table)
-    assert read_existing_delta(spark, table).count() == 4
+    dw.append_delta(spark.range(4, 6), table)
+    assert dr.read_delta(spark, table).count() == 6
+    assert dr.read_delta(spark, table, version=0).count() == 4
+    with pytest.raises(ValueError, match="not available"):
+        dr.read_delta(spark, table, version=2)
+
+
+def test_nested_types_roundtrip(spark, tmp_path):
+    """map / struct / nested array columns serialize into the protocol's
+    schemaString (``keyType``/``valueType``/``valueContainsNull``,
+    ``fields``) and read back with the same schema and rows across
+    create → append; nested leaves carry no per-file stats."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("extra", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("s", T.StructType([
+            T.StructField("b", T.IntegerType()),
+            T.StructField("c", T.StringType()),
+        ])),
+        T.StructField("tags", T.ArrayType(T.StructType([
+            T.StructField("k", T.StringType()),
+            T.StructField("v", T.MapType(T.StringType(), T.LongType())),
+        ]))),
+    ])
+    r0 = [(0, {"a": "x"}, (1, "one"), [("t", {"n": 1})]),
+          (1, {}, None, None)]
+    r1 = [(2, {"b": None}, (None, "two"), [])]
+    table = str(tmp_path / "nested")
+    dw.create_delta(spark.createDataFrame(r0, schema), table)
+    dw.append_delta(spark.createDataFrame(r1, schema), table)
+    meta = dr._replay(spark, table, None)["metaData"]
+    fields = json.loads(meta["schemaString"])["fields"]
+    assert fields[1]["type"] == {
+        "type": "map", "keyType": "string", "valueType": "string",
+        "valueContainsNull": True,
+    }
+    assert fields[2]["type"]["type"] == "struct"
+    assert [f["name"] for f in fields[2]["type"]["fields"]] == ["b", "c"]
+    back = dr.read_delta(spark, table)
+    assert back.schema == schema
+    expect = spark.createDataFrame(r0 + r1, schema)
+    assert sorted(back.collect()) == sorted(expect.collect())
+    stat_cols = [
+        set(json.loads(a["stats"])["minValues"])
+        for a in dr._replay(spark, table, None)["files"].values()
+    ]
+    assert {"id"} in stat_cols and all(c <= {"id"} for c in stat_cols)
+

@@ -5,7 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
+from dst_spark_k8_lakehouse_spark.plans import delta_writer as dw
 from jobs.revenue_report import run
 
 
@@ -17,7 +18,7 @@ def test_revenue_report_job(spark, sf_dir, tmp_path):
     report = spark.read.parquet(f"{out}/revenue_by_nation")
     assert set(report.columns) == {"region", "nation", "revenue", "n_items"}
 
-    log = VersionedTable(spark, f"{out}/_activity_log").read()
+    log = dr.read_delta(spark, f"{out}/_activity_log")
     by_fn = {r.metric_function: r for r in log.collect()}
     assert by_fn["count"].metric_value == 25.0
     assert by_fn["completion"].status == "success"
@@ -85,12 +86,12 @@ def test_curate_corpus_job(spark, sf_dir, tmp_path):
     counts = curate(spark, sf_dir, out)
     assert 0 < counts["gold_docs"] <= counts["silver_docs"] <= counts["bronze_docs"]
 
-    corpus = VersionedTable(spark, f"{out}/corpus").read()
-    sigs = VersionedTable(spark, f"{out}/signatures").read()
+    corpus = dr.read_delta(spark, f"{out}/corpus")
+    sigs = dr.read_delta(spark, f"{out}/signatures")
     assert corpus.count() == counts["gold_docs"]
     assert sigs.count() == counts["gold_docs"]  # state matches corpus
 
-    log = VersionedTable(spark, f"{out}/_activity_log").read()
+    log = dr.read_delta(spark, f"{out}/_activity_log")
     assert log.count() == 7  # 6 layer counts + completion, one commit
     assert (
         log.filter("metric_function = 'completion'").collect()[0].status
@@ -135,10 +136,9 @@ def test_ingest_batch_job(spark, sf_dir, tmp_path):
 
     state = str(tmp_path / "state")
     curate(spark, sf_dir, state)
-    corpus = VersionedTable(spark, f"{state}/corpus")
-    n0 = corpus.read().count()
-
-    base = corpus.read()
+    corpus = f"{state}/corpus"
+    base = dr.read_delta(spark, corpus)
+    n0 = base.count()
     fresh = base.limit(4).select(
         (F.col("doc_id") + 900_000).alias("doc_id"),
         F.concat(F.lit("totally new the "), F.reverse("text")).alias("text"),
@@ -160,14 +160,20 @@ def test_ingest_batch_job(spark, sf_dir, tmp_path):
     assert counts["batch_after_exact"] == 6  # 3 exact copies dropped
     assert counts["batch_ingested"] == 4  # 2 near-dups dropped too
 
-    assert corpus.read().count() == n0 + 4
+    assert dr.read_delta(spark, corpus).count() == n0 + 4
     # state grew by exactly the ingested docs
-    assert (
-        VersionedTable(spark, f"{state}/hashes").read().count()
-        == n0 + 4
-    )
-    sigs = VersionedTable(spark, f"{state}/signatures").read()
-    assert sigs.join(corpus.read(), "doc_id", "left_anti").count() == 0
+    assert dr.read_delta(spark, f"{state}/hashes").count() == n0 + 4
+    sigs = dr.read_delta(spark, f"{state}/signatures")
+    assert sigs.join(
+        dr.read_delta(spark, corpus), "doc_id", "left_anti"
+    ).count() == 0
+    # every state table and the activity log is a native Delta table
+    for name in ("corpus", "signatures", "hashes", "_activity_log"):
+        assert dr.is_delta_table(f"{state}/{name}"), name
+    from dst_spark_k8_lakehouse_spark.metrics import METRICS_SCHEMA
+
+    log = dr.read_delta(spark, f"{state}/_activity_log")
+    assert log.schema == METRICS_SCHEMA
 
     # idempotence of policy: re-ingesting the same batch drops everything
     counts2 = ingest(spark, batch, state)
@@ -208,9 +214,9 @@ def test_stream_ingest_resumes_and_stays_idempotent(spark, sf_dir, tmp_path):
 
     state = str(tmp_path / "state")
     curate(spark, sf_dir, state)
-    corpus = VersionedTable(spark, f"{state}/corpus")
-    n0 = corpus.read().count()
-    base = corpus.read()
+    corpus = f"{state}/corpus"
+    base = dr.read_delta(spark, corpus)
+    n0 = base.count()
 
     arrivals = tmp_path / "arrivals"
     arrivals.mkdir()
@@ -241,11 +247,11 @@ def test_stream_ingest_resumes_and_stays_idempotent(spark, sf_dir, tmp_path):
 
     counts = run_stream(spark, str(arrivals) + "/*", state)
     assert [c["batch_ingested"] for c in counts] == [3, 2]
-    assert corpus.read().count() == n0 + 5
+    assert dr.read_delta(spark, corpus).count() == n0 + 5
 
     # restart with the same checkpoint: nothing new to process
     assert run_stream(spark, str(arrivals) + "/*", state) == []
-    assert corpus.read().count() == n0 + 5
+    assert dr.read_delta(spark, corpus).count() == n0 + 5
 
     # retry shape: the same content re-arrives as a NEW file (new ids);
     # the source processes it, the ingest drops every doc
@@ -255,7 +261,7 @@ def test_stream_ingest_resumes_and_stays_idempotent(spark, sf_dir, tmp_path):
     ).coalesce(1).write.parquet(str(arrivals / "b3"))
     counts3 = run_stream(spark, str(arrivals) + "/*", state)
     assert [c["batch_ingested"] for c in counts3] == [0]
-    assert corpus.read().count() == n0 + 5
+    assert dr.read_delta(spark, corpus).count() == n0 + 5
 
 
 def test_ingest_refuses_incompatible_signature_state(spark, sf_dir, tmp_path):
@@ -269,9 +275,8 @@ def test_ingest_refuses_incompatible_signature_state(spark, sf_dir, tmp_path):
 
     state = str(tmp_path / "state")
     curate(spark, sf_dir, state)
-    sigs_t = VersionedTable(spark, f"{state}/signatures")
     # simulate pre-fix state: strip the version stamp
-    sigs_t.overwrite(sigs_t.read().drop("sig_v"))
+    dw.drop_column(spark, f"{state}/signatures", "sig_v")
     batch = spark.createDataFrame(
         [(999_999, "the quick brown fox jumps over the lazy dog", "en",
           "src0", 43)],
@@ -292,8 +297,8 @@ def test_stream_ingest_reconciles_partial_state(spark, sf_dir, tmp_path):
 
     state = str(tmp_path / "state")
     curate(spark, sf_dir, state)
-    corpus = VersionedTable(spark, f"{state}/corpus")
-    base = corpus.read()
+    corpus = f"{state}/corpus"
+    base = dr.read_delta(spark, corpus)
 
     arrivals = tmp_path / "arrivals"
     arrivals.mkdir()
@@ -308,15 +313,13 @@ def test_stream_ingest_reconciles_partial_state(spark, sf_dir, tmp_path):
     assert [c["batch_ingested"] for c in run_stream(
         spark, str(arrivals) + "/*", state
     )] == [2]
-    n1 = corpus.read().count()
+    n1 = dr.read_delta(spark, corpus).count()
 
     # simulate the crash window: corpus rows landed, state rows did not
-    hashes_t = VersionedTable(spark, f"{state}/hashes")
-    sigs_t = VersionedTable(spark, f"{state}/signatures")
-    hashes_t.overwrite(
-        hashes_t.read().filter(F.col("doc_id") < 700_000)
-    )
-    sigs_t.overwrite(sigs_t.read().filter(F.col("doc_id") < 700_000))
+    for t in (f"{state}/hashes", f"{state}/signatures"):
+        dw.overwrite_delta(
+            dr.read_delta(spark, t).filter(F.col("doc_id") < 700_000), t
+        )
 
     # the same content re-arrives as a new file with new ids: without
     # reconciliation the missing state rows would let it duplicate
@@ -327,7 +330,7 @@ def test_stream_ingest_reconciles_partial_state(spark, sf_dir, tmp_path):
     assert [c["batch_ingested"] for c in run_stream(
         spark, str(arrivals) + "/*", state
     )] == [0]
-    assert corpus.read().count() == n1
+    assert dr.read_delta(spark, corpus).count() == n1
 
 
 def test_wap_ingest_gates_bad_batches(spark, tmp_path):

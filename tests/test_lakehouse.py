@@ -1,6 +1,6 @@
 """Lakehouse-layer tests: the reference's 02_iceberg_demo / 03_delta_demo
 flows (DDL, DML, time travel, schema evolution, VACUUM) reproduced over
-the parquet VersionedTable + session-catalog DDL."""
+the native Delta stack + session-catalog DDL."""
 
 from __future__ import annotations
 
@@ -9,59 +9,70 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable, ddl, dml
+from dst_spark_k8_lakehouse_spark.plans import ddl
+from dst_spark_k8_lakehouse_spark.plans import delta_dml as dml
+from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
+from dst_spark_k8_lakehouse_spark.plans import delta_writer as dw
+from dst_spark_k8_lakehouse_spark.plans.dml import execute_native_sql
 
 
 @pytest.fixture()
 def vt(spark, tmp_path):
-    t = VersionedTable(spark, str(tmp_path / "tbl"))
-    t.create(
+    t = str(tmp_path / "tbl")
+    dw.create_delta(
         spark.createDataFrame(
             [Row(id=1, name="alice", bal=10.0), Row(id=2, name="bob", bal=20.0)]
-        )
+        ),
+        t,
     )
     return t
 
 
 def test_append_and_read(spark, vt):
-    vt.append(spark.createDataFrame([Row(id=3, name="carol", bal=30.0)]))
-    assert vt.read().count() == 3
+    dw.append_delta(
+        spark.createDataFrame([Row(id=3, name="carol", bal=30.0)]), vt
+    )
+    assert dr.read_delta(spark, vt).count() == 3
 
 
 def test_update_rewrites_matching_rows(spark, vt):
     """``UPDATE t SET bal = bal * 2 WHERE id = 1``
     (02_iceberg_demo.ipynb:91 shape)."""
-    vt.update("id = 1", {"bal": "bal * 2"})
-    rows = {r.id: r.bal for r in vt.read().collect()}
+    dml.update_delta(spark, vt, "id = 1", {"bal": "bal * 2"})
+    rows = {r.id: r.bal for r in dr.read_delta(spark, vt).collect()}
     assert rows == {1: 20.0, 2: 20.0}
 
 
 def test_delete_removes_matching_rows(spark, vt):
-    vt.delete("name = 'bob'")
-    assert [r.id for r in vt.read().collect()] == [1]
+    dml.delete_delta(spark, vt, "name = 'bob'")
+    assert [r.id for r in dr.read_delta(spark, vt).collect()] == [1]
 
 
 def test_time_travel_by_version(spark, vt):
     """versionAsOf semantics (03_delta_demo.ipynb:134): every prior
     state stays addressable."""
-    vt.delete("id = 1")
-    vt.append(spark.createDataFrame([Row(id=9, name="zed", bal=0.0)]))
-    assert vt.read(version=0).count() == 2  # original
-    assert vt.read(version=1).count() == 1  # after delete
-    assert vt.read().count() == 2  # latest
+    dml.delete_delta(spark, vt, "id = 1")
+    dw.append_delta(
+        spark.createDataFrame([Row(id=9, name="zed", bal=0.0)]), vt
+    )
+    assert dr.read_delta(spark, vt, version=0).count() == 2  # original
+    assert dr.read_delta(spark, vt, version=1).count() == 1  # after delete
+    assert dr.read_delta(spark, vt).count() == 2  # latest
     with pytest.raises(ValueError):
-        vt.read(version=99)
+        dr.read_delta(spark, vt, version=99)
 
 
 def test_schema_merge_append(spark, vt):
     """mergeSchema on append (spark_logger.py:55-57): new column appears,
     old rows read NULL for it."""
-    vt.append(
+    dw.append_delta(
         spark.createDataFrame(
             [Row(id=4, name="dara", bal=5.0, tier="gold")]
-        )
+        ),
+        vt,
+        merge_schema=True,
     )
-    df = vt.read()
+    df = dr.read_delta(spark, vt)
     assert "tier" in df.columns
     assert df.filter(F.col("tier").isNull()).count() == 2
 
@@ -69,18 +80,22 @@ def test_schema_merge_append(spark, vt):
 def test_metadata_only_rename(spark, vt):
     """RENAME COLUMN (02_iceberg_demo.ipynb:123) without touching data
     files; time travel before the rename still shows the old name."""
-    vt.rename_column("bal", "balance")
-    assert "balance" in vt.read().columns
-    assert "bal" in vt.read(version=0).columns
+    files = set(dr._replay(spark, vt, None)["files"])
+    dw.rename_column(spark, vt, "bal", "balance")
+    assert "balance" in dr.read_delta(spark, vt).columns
+    assert "bal" in dr.read_delta(spark, vt, version=0).columns
+    assert set(dr._replay(spark, vt, None)["files"]) == files
 
 
 def test_history_and_vacuum(spark, vt):
-    vt.overwrite(spark.createDataFrame([Row(id=7, name="eve", bal=1.0)]))
-    hist = {r.version: r.operation for r in vt.history().collect()}
-    assert hist == {0: "CREATE", 1: "OVERWRITE"}
-    removed = vt.vacuum(retain_last=1)
-    assert len(removed) == 1  # the CREATE snapshot's files
-    assert vt.read().count() == 1  # latest unaffected
+    dw.overwrite_delta(
+        spark.createDataFrame([Row(id=7, name="eve", bal=1.0)]), vt
+    )
+    hist = {h["version"]: h["operation"] for h in dr.delta_history(vt)}
+    assert hist == {0: "CREATE TABLE AS SELECT", 1: "WRITE"}
+    removed = dw.vacuum_delta(spark, vt, retain_versions=1)
+    assert removed  # the CREATE version's files
+    assert dr.read_delta(spark, vt).count() == 1  # latest unaffected
 
 
 def test_ddl_roundtrip(spark, tmp_path):
@@ -103,8 +118,8 @@ def test_ddl_roundtrip(spark, tmp_path):
         )
         assert spark.table("demo_ns.users").count() == 2
         # NB: plain-parquet tables reject a self-referencing overwrite
-        # SELECT (no snapshot isolation) — that flow goes through
-        # VersionedTable; see ddl.insert_overwrite docstring.
+        # SELECT (no snapshot isolation) — that flow runs on a native
+        # Delta table; see ddl.insert_overwrite docstring.
         ddl.insert_overwrite(
             spark,
             "demo_ns.users",
@@ -155,224 +170,189 @@ def test_partitioned_table_prunes(spark, tmp_path):
         ddl.drop_table(spark, "default.events_p")
 
 
-def test_open_table_backend_selection(spark, tmp_path):
-    """open_table returns the parquet-native VersionedTable when
-    delta-spark is absent, and the two backends expose the same call
-    surface (so call sites are backend-agnostic)."""
-    from dst_spark_k8_lakehouse_spark.plans import (
-        DeltaBackedTable,
-        VersionedTable,
-        delta_available,
-        open_table,
-    )
-
-    import inspect
-
-    t = open_table(spark, str(tmp_path / "t"))
-    expected = DeltaBackedTable if delta_available() else VersionedTable
-    assert isinstance(t, expected)
-    # call-site compatibility: same parameter names for the shared
-    # surface (not just method existence) — a signature drift between
-    # backends breaks the open_table contract silently
-    for method in (
-        "create", "append", "overwrite", "read", "update", "delete",
-        "merge", "history", "committed_props", "latest_prop", "zorder",
-    ):
-        pv = list(inspect.signature(getattr(VersionedTable, method)).parameters)
-        pd_ = list(inspect.signature(getattr(DeltaBackedTable, method)).parameters)
-        assert pv == pd_, f"{method}: {pv} != {pd_}"
-    # vacuum diverges semantically (snapshot-count vs hours) — both
-    # must be keyword-only so a positional number cannot silently
-    # change meaning across backends
-    for cls in (VersionedTable, DeltaBackedTable):
-        params = inspect.signature(cls.vacuum).parameters
-        assert all(
-            p.kind == inspect.Parameter.KEYWORD_ONLY
-            for n, p in params.items() if n != "self"
-        ), cls
-
-
-def test_delta_backend_roundtrip(spark, tmp_path):
-    """Native Delta semantics (03_delta_demo.ipynb:96-189): create,
-    append, time travel, history. Runs only where delta-spark and its
-    jars are installed; this container ships vanilla Spark."""
-    pytest.importorskip("delta")
-    from dst_spark_k8_lakehouse_spark.plans import DeltaBackedTable
-
-    path = str(tmp_path / "dt")
-    t = DeltaBackedTable(spark, path)
-    t.create(spark.range(5).withColumnRenamed("id", "v"))
-    t.append(spark.range(5, 8).withColumnRenamed("id", "v"))
-    assert t.read().count() == 8
-    assert t.read(version=0).count() == 5
-    assert t.history().count() == 2
-    # idempotent stream batch: same txn version commits once
-    batch = spark.range(100, 103).withColumnRenamed("id", "v")
-    t.append(batch, {"stream_batch_id": 7})
-    t.append(batch, {"stream_batch_id": 7})
-    assert t.read().count() == 11
-
-
 def test_drop_column_metadata_only_and_time_travel(spark, tmp_path):
     """DROP COLUMN hides the column without rewriting data; time travel
     to the pre-drop version still shows it; a post-drop append keeps
     the drop in effect."""
-    t = VersionedTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1, "a", 10.0)], "id long, name string, secret double"))
-    v = t.drop_column("secret")
-    assert "secret" not in t.read().columns
-    assert "secret" in t.read(version=v - 1).columns  # time travel
-    t.append(spark.createDataFrame([(2, "b", 20.0)], "id long, name string, secret double"))
-    assert "secret" not in t.read().columns
-    assert t.read().count() == 2
+    t = str(tmp_path / "t")
+    dw.create_delta(
+        spark.createDataFrame(
+            [(1, "a", 10.0)], "id long, name string, secret double"
+        ),
+        t,
+    )
+    files = set(dr._replay(spark, t, None)["files"])
+    v = dw.drop_column(spark, t, "secret")
+    assert set(dr._replay(spark, t, None)["files"]) == files
+    assert "secret" not in dr.read_delta(spark, t).columns
+    assert "secret" in dr.read_delta(spark, t, version=v - 1).columns
+    dw.append_delta(
+        spark.createDataFrame([(2, "b")], "id long, name string"), t
+    )
+    assert "secret" not in dr.read_delta(spark, t).columns
+    assert dr.read_delta(spark, t).count() == 2
     with pytest.raises(ValueError):
-        t.drop_column("secret")
+        dw.drop_column(spark, t, "secret")
     # unknown column: must raise (Iceberg behavior), not commit a
-    # silent drop that would hide a future schema-merged column
-    with pytest.raises(ValueError, match="unknown column"):
-        t.drop_column("secrt")
+    # silent drop
+    with pytest.raises(ValueError, match="no column"):
+        dw.drop_column(spark, t, "secrt")
 
 
 def test_latest_prop_wins_over_history(spark, tmp_path):
-    """Table-state props resolve to the NEWEST snapshot that set them:
-    a rebuild with a smaller value must not be shadowed by the old one
-    (the IVF n_cells desync case)."""
-    t = VersionedTable(spark, str(tmp_path / "t"))
-    t.create(spark.range(3), props={"ivf_n_cells": 8})
-    t.overwrite(spark.range(2), props={"ivf_n_cells": 4})
-    assert t.latest_prop("ivf_n_cells") == 4
-    assert t.committed_props("ivf_n_cells") == {8, 4}
-    assert t.latest_prop("absent", default="d") == "d"
+    """Table-state properties resolve to the NEWEST metadata that set
+    them: a rebuild with a smaller value must not be shadowed by the
+    old one (the IVF n_cells desync case)."""
+    t = str(tmp_path / "t")
+    dw.create_delta(spark.range(3), t)
+    dw.set_table_properties(spark, t, {"ivf_n_cells": "8"})
+    dw.overwrite_delta(spark.range(2), t)
+    dw.set_table_properties(spark, t, {"ivf_n_cells": "4"})
+    conf = dr._replay(spark, t, None)["metaData"]["configuration"]
+    assert conf["ivf_n_cells"] == "4"
+    assert "absent" not in conf
 
 
 def test_files_metadata_table(spark, tmp_path):
-    """files() lists one row per live data dir with real sizes, and
-    tracks time travel."""
-    t = VersionedTable(spark, str(tmp_path / "t"))
-    t.create(spark.range(10).coalesce(1))
-    t.append(spark.range(5).coalesce(1))
-    f = t.files().collect()
-    assert len(f) == 2  # create dir + append dir
-    assert all(r.n_parquet_files >= 1 and r.bytes > 0 for r in f)
-    assert len(t.files(version=0).collect()) == 1
+    """The planned file list holds one entry per live data file with
+    real sizes, and tracks time travel."""
+    t = str(tmp_path / "t")
+    dw.create_delta(spark.range(10).coalesce(1), t)
+    dw.append_delta(spark.range(5).coalesce(1), t)
+    files = dr.plan_file_list(spark, t)["files"]
+    assert len(files) == 2  # create file + append file
+    adds = dr._replay(spark, t, None)["files"].values()
+    assert all(a["size"] > 0 for a in adds)
+    assert len(dr.plan_file_list(spark, t, version=0)["files"]) == 1
 
 
 def test_compact_collapses_snapshot_dirs(spark, tmp_path):
-    """Compaction rewrites N per-append dirs into one, preserving rows
-    and time travel; vacuum afterwards reclaims the old dirs."""
-    t = VersionedTable(spark, str(tmp_path / "t"))
-    t.create(spark.range(10).coalesce(1))
-    t.append(spark.range(10, 15).coalesce(1))
-    t.append(spark.range(15, 18).coalesce(1))
-    assert t.files().count() == 3
-    v = t.compact()
-    assert t.files().count() == 1
-    assert t.read().count() == 18
-    assert t.read(version=v - 1).count() == 18  # pre-compact still reads
-    assert "COMPACT" in {r.operation for r in t.history().collect()}
-    removed = t.vacuum(retain_last=1)
-    assert len(removed) == 3  # the pre-compaction dirs are reclaimed
-    assert t.read().count() == 18
+    """Compaction rewrites N per-append files into one, preserving rows
+    and time travel; vacuum afterwards reclaims the old files."""
+    t = str(tmp_path / "t")
+    dw.create_delta(spark.range(10).coalesce(1), t)
+    dw.append_delta(spark.range(10, 15).coalesce(1), t)
+    dw.append_delta(spark.range(15, 18).coalesce(1), t)
+    assert len(dr.plan_file_list(spark, t)["files"]) == 3
+    v = dw.compact_delta(spark, t, target_files=1)
+    assert len(dr.plan_file_list(spark, t)["files"]) == 1
+    assert dr.read_delta(spark, t).count() == 18
+    assert dr.read_delta(spark, t, version=v - 1).count() == 18
+    assert "OPTIMIZE" in {h["operation"] for h in dr.delta_history(t)}
+    removed = dw.vacuum_delta(spark, t, retain_versions=1)
+    assert len(removed) == 3  # the pre-compaction files are reclaimed
+    assert dr.read_delta(spark, t).count() == 18
 
 
 def test_rename_then_append_with_new_name(spark, tmp_path):
     """A post-rename append naturally uses the CURRENT column name;
-    read() must fold old-name and new-name files into one column
+    the read must fold old-name and new-name files into one column
     rather than surfacing an ambiguous duplicate."""
-    t = VersionedTable(spark, str(tmp_path / "t"))
-    t.create(spark.createDataFrame([(1, 10.0)], "id long, bal double"))
-    t.rename_column("bal", "balance")
-    t.append(spark.createDataFrame([(2, 20.0)], "id long, balance double"))
-    df = t.read()
+    t = str(tmp_path / "t")
+    dw.create_delta(
+        spark.createDataFrame([(1, 10.0)], "id long, bal double"), t
+    )
+    dw.rename_column(spark, t, "bal", "balance")
+    dw.append_delta(
+        spark.createDataFrame([(2, 20.0)], "id long, balance double"), t
+    )
+    df = dr.read_delta(spark, t)
     assert df.columns.count("balance") == 1 and "bal" not in df.columns
     got = {r.id: r.balance for r in df.collect()}
     assert got == {1: 10.0, 2: 20.0}
 
 
 def test_vacuum_and_files_validate_arguments(spark, tmp_path):
-    t = VersionedTable(spark, str(tmp_path / "t"))
-    t.create(spark.range(3))
+    t = str(tmp_path / "t")
+    dw.create_delta(spark.range(3), t)
     with pytest.raises(ValueError):
-        t.vacuum(retain_last=0)
+        dw.vacuum_delta(spark, t, retain_versions=0)
     with pytest.raises(ValueError):
-        t.files(version=-2)
-    with pytest.raises(ValueError):
-        t.files(version=99)
+        dr.plan_file_list(spark, t, version=99)
 
 
-# --- SQL-string DML shim (plans/dml.py) --------------------------------
+# --- SQL statement text over native Delta (plans/dml.py) --------------
 
 
 def test_sql_update_matches_api_call(spark, vt):
     """The statement text from 02_iceberg_demo.ipynb:91 executes over
-    the versioned table and equals the direct API call."""
-    dml.execute_dml(
+    the native table and equals the direct API call."""
+    execute_native_sql(
+        spark,
         "UPDATE tbl SET bal = bal * 2, name = upper(name) WHERE id = 1",
         {"tbl": vt},
     )
-    rows = {r.id: (r.name, r.bal) for r in vt.read().collect()}
+    rows = {r.id: (r.name, r.bal) for r in dr.read_delta(spark, vt).collect()}
     assert rows == {1: ("ALICE", 20.0), 2: ("bob", 20.0)}
 
 
 def test_sql_update_set_with_function_commas(spark, vt):
-    dml.execute_dml(
-        "UPDATE tbl SET bal = greatest(bal, 15.0)", {"tbl": vt}
+    execute_native_sql(
+        spark, "UPDATE tbl SET bal = greatest(bal, 15.0)", {"tbl": vt}
     )
-    rows = {r.id: r.bal for r in vt.read().collect()}
+    rows = {r.id: r.bal for r in dr.read_delta(spark, vt).collect()}
     assert rows == {1: 15.0, 2: 20.0}
 
 
 def test_sql_delete(spark, vt):
-    dml.execute_dml("DELETE FROM tbl WHERE name = 'bob'", {"tbl": vt})
-    assert [r.id for r in vt.read().collect()] == [1]
+    execute_native_sql(
+        spark, "DELETE FROM tbl WHERE name = 'bob'", {"tbl": vt}
+    )
+    assert [r.id for r in dr.read_delta(spark, vt).collect()] == [1]
 
 
 def test_sql_merge_upsert(spark, vt):
     src = spark.createDataFrame(
         [Row(id=2, name="bobby", bal=99.0), Row(id=3, name="carol", bal=30.0)]
     )
-    dml.execute_dml(
+    execute_native_sql(
+        spark,
         """MERGE INTO tbl AS t USING src AS s ON t.id = s.id
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *""",
         {"tbl": vt},
         sources={"src": src},
     )
-    rows = {r.id: r.name for r in vt.read().collect()}
+    rows = {r.id: r.name for r in dr.read_delta(spark, vt).collect()}
     assert rows == {1: "alice", 2: "bobby", 3: "carol"}
 
 
 def test_sql_merge_source_from_versioned_table(spark, vt, tmp_path):
-    src_t = VersionedTable(spark, str(tmp_path / "src"))
-    src_t.create(spark.createDataFrame([Row(id=9, name="zed", bal=1.0)]))
-    dml.execute_dml(
+    src_t = str(tmp_path / "src")
+    dw.create_delta(
+        spark.createDataFrame([Row(id=9, name="zed", bal=1.0)]), src_t
+    )
+    execute_native_sql(
+        spark,
         "MERGE INTO tbl USING src ON id = id "
         "WHEN NOT MATCHED THEN INSERT *",
         {"tbl": vt, "src": src_t},
     )
-    assert 9 in {r.id for r in vt.read().collect()}
+    assert 9 in {r.id for r in dr.read_delta(spark, vt).collect()}
 
 
 def test_sql_update_literal_containing_where(spark, vt):
     """A SET literal containing the word 'where' must not mis-split the
     statement (ADVICE r4: the old regex split was quote-unaware)."""
-    dml.execute_dml(
+    execute_native_sql(
+        spark,
         "UPDATE tbl SET name = 'fixed where broken' WHERE id = 2",
         {"tbl": vt},
     )
-    rows = {r.id: r.name for r in vt.read().collect()}
+    rows = {r.id: r.name for r in dr.read_delta(spark, vt).collect()}
     assert rows == {1: "alice", 2: "fixed where broken"}
 
 
 def test_sql_merge_literal_containing_when(spark, vt):
     src = spark.createDataFrame([Row(id=3, name="x when y", bal=1.0)])
-    dml.execute_dml(
+    execute_native_sql(
+        spark,
         "MERGE INTO tbl USING src ON id = id "
         "WHEN NOT MATCHED THEN INSERT *",
         {"tbl": vt},
         sources={"src": src},
     )
-    assert {r.name for r in vt.read().collect()} == {
+    assert {r.name for r in dr.read_delta(spark, vt).collect()} == {
         "alice", "bob", "x when y",
     }
 
@@ -386,7 +366,11 @@ def test_sql_dml_rejects_unsupported(spark, vt):
         "MERGE INTO tbl USING s ON id = id WHEN MATCHED THEN DELETE",
     ):
         with pytest.raises(ValueError):
-            dml.execute_dml(bad, {"tbl": vt}, sources={"s": vt.read()})
+            execute_native_sql(
+                spark, bad, {"tbl": vt},
+                sources={"s": dr.read_delta(spark, vt)},
+            )
+    assert dr.read_delta(spark, vt).count() == 2  # nothing committed
 
 
 # --- partition transforms (D5 fallback) --------------------------------
@@ -462,11 +446,12 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
         (F.col("id") * 40503 % n).alias("b"),
         F.col("id").alias("payload"),
     )
-    t = VersionedTable(spark, str(tmp_path / "zt"))
-    t.create(df)
-    v = t.zorder(["a", "b"], n_files=8)
-    assert t.history().filter("operation = 'ZORDER'").count() == 1
-    back = t.read(v).select(
+    t = str(tmp_path / "zt")
+    dw.create_delta(df, t)
+    v = dw.zorder_delta(spark, t, ["a", "b"], n_files=8)
+    ops = [h["operation"] for h in dr.delta_history(t)]
+    assert ops.count("OPTIMIZE ZORDER") == 1
+    back = dr.read_delta(spark, t, version=v).select(
         "a", "b", F.input_file_name().alias("f")
     )
     spans = back.groupBy("f").agg(
@@ -482,11 +467,11 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     assert mean_sa < 0.75 * n, mean_sa
     assert mean_sb < 0.75 * n, mean_sb
     # rows preserved exactly
-    assert t.read(v).count() == n
+    assert dr.read_delta(spark, t, version=v).count() == n
 
 
 def test_zorder_rejects_bad_cols(spark, tmp_path):
-    t = VersionedTable(spark, str(tmp_path / "zt2"))
-    t.create(spark.createDataFrame([Row(a=1)]))
+    t = str(tmp_path / "zt2")
+    dw.create_delta(spark.createDataFrame([Row(a=1)]), t)
     with pytest.raises(ValueError):
-        t.zorder([])
+        dw.zorder_delta(spark, t, [])

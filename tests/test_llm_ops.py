@@ -187,12 +187,13 @@ def test_incremental_neardup_against_persisted_signatures(
     """The daily-increment flow: persist corpus signatures once, then
     check a new batch (containing copies of existing docs) against them
     without re-reading corpus text."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
+    from dst_spark_k8_lakehouse_spark.plans import delta_writer as dw
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < 400)
-    sig_table = VersionedTable(spark, str(tmp_path / "sigs"))
-    sig_table.create(dedup.signature_table(corpus))
+    sig_table = str(tmp_path / "sigs")
+    dw.create_delta(dedup.signature_table(corpus), sig_table)
 
     # new batch: 5 fresh docs + 5 copies of existing corpus docs
     fresh = docs.filter(
@@ -204,7 +205,7 @@ def test_incremental_neardup_against_persisted_signatures(
     batch = fresh.unionByName(copies)
 
     pairs, new_sigs = dedup.incremental_neardup(
-        batch, sig_table.read(), threshold=0.9
+        batch, dr.read_delta(spark, sig_table), threshold=0.9
     )
     hits = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     copied_ids = {r.doc_id for r in copies.collect()}
@@ -212,8 +213,8 @@ def test_incremental_neardup_against_persisted_signatures(
     assert {b - 20_000 for (a, b) in hits if b in copied_ids} == {
         b - 20_000 for b in copied_ids
     }
-    sig_table.append(new_sigs)  # state grows by the batch only
-    assert sig_table.read().count() == 400 + 10
+    dw.append_delta(new_sigs, sig_table)  # state grows by the batch only
+    assert dr.read_delta(spark, sig_table).count() == 400 + 10
 
 
 def test_incremental_neardup_new_ids_below_corpus_ids(spark, sf_dir):
@@ -272,13 +273,13 @@ def test_ivf_rebuild_uses_latest_n_cells(spark, sf_dir, tmp_path):
     the probe use the new count: with the old max-over-history lookup,
     vec_id rows in [new_n, old_n) would be misread as centroids."""
     from dst_spark_k8_lakehouse_spark.llm import similarity
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf")
     similarity.build_ivf_index(emb, path, n_cells=8)
     similarity.build_ivf_index(emb, path, n_cells=4)
-    assert VersionedTable(spark, path).latest_prop("ivf_n_cells") == 4
+    assert similarity._ivf_n_cells(spark, path) == 4
     qvec = emb.filter("vec_id = 0").collect()[0].embedding
     out = similarity.query_ivf_index(spark, path, qvec, k=5).collect()
     assert len(out) == 5
@@ -287,7 +288,7 @@ def test_ivf_rebuild_uses_latest_n_cells(spark, sf_dir, tmp_path):
     # from the 4-cell assignment only
     cells = {
         r.cell
-        for r in VersionedTable(spark, path).read().select("cell").distinct().collect()
+        for r in dr.read_delta(spark, path).select("cell").distinct().collect()
     }
     assert cells <= {0, 1, 2, 3}
 
@@ -656,16 +657,17 @@ def test_ivf_append_extends_index_without_rebuild(spark, sf_dir, tmp_path):
     import pytest
 
     from dst_spark_k8_lakehouse_spark.llm import similarity
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
 
     emb = load_table(spark, sf_dir, "embeddings")
     initial = emb.filter(F.col("vec_id") < 400)
     batch = emb.filter(F.col("vec_id") >= 400).limit(20)
     path = str(tmp_path / "ivf")
-    table = similarity.build_ivf_index(initial, path, n_cells=8)
-    n0 = table.read().count()
+    similarity.build_ivf_index(initial, path, n_cells=8)
+    n0 = dr.read_delta(spark, path).count()
 
     similarity.append_to_ivf_index(batch, path)
-    idx = table.read()
+    idx = dr.read_delta(spark, path)
     assert idx.count() == n0 + batch.count()
 
     # appended assignment equals the build rule under the same

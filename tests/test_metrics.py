@@ -15,7 +15,7 @@ from dst_spark_k8_lakehouse_spark.metrics import (
     helpers,
     pipeline,
 )
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
 
 
 @pytest.fixture()
@@ -99,7 +99,7 @@ def test_metric_context_roundtrip(spark, tmp_path):
         assert rid == ctx.run_id  # shared run_id (context.py:16)
         assert ctx.logger.pending == 1  # buffered, not committed
 
-    log = VersionedTable(spark, path).read()
+    log = dr.read_delta(spark, path)
     assert log.schema == METRICS_SCHEMA
     rows = log.collect()
     assert len(rows) == 2  # user event + completion, ONE commit
@@ -107,7 +107,7 @@ def test_metric_context_roundtrip(spark, tmp_path):
     assert completion.status == "success"
     assert completion.duration_ms is not None and completion.duration_ms >= 0
     assert {r.run_id for r in rows} == {ctx.run_id}
-    assert VersionedTable(spark, path).history().count() == 1  # batched
+    assert len(dr.delta_history(path)) == 1  # batched
 
 
 def test_metric_context_failure_status(spark, tmp_path):
@@ -122,7 +122,7 @@ def test_metric_context_failure_status(spark, tmp_path):
             table_path=path,
         ):
             raise RuntimeError("boom")
-    rows = VersionedTable(spark, path).read().collect()
+    rows = dr.read_delta(spark, path).collect()
     assert len(rows) == 1 and rows[0].status == "failure"
 
 
@@ -138,12 +138,16 @@ def test_logger_batches_across_flushes(spark, tmp_path):
             value=i,
             unit="rows",
             function="count",
+            extra={"i": str(i)},
         )
     assert logger.flush() == 5
     assert logger.flush() == 0  # buffer drained
-    table = VersionedTable(spark, path)
-    assert table.read().count() == 5
-    assert table.history().count() == 1
+    log = dr.read_delta(spark, path)
+    assert log.schema == METRICS_SCHEMA
+    assert {r.description: r.extra for r in log.collect()} == {
+        f"m{i}": {"i": str(i)} for i in range(5)
+    }
+    assert len(dr.delta_history(path)) == 1
 
 
 def test_helpers(spark, customers_raw, tmp_path):

@@ -203,15 +203,16 @@ def test_zorder_plan_is_single_range_shuffle(spark, tmp_path):
     """The zorder rewrite must cost exactly one range exchange (plus
     the quantile sketch passes) — not a global sort, not repeated
     shuffles."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
+    from dst_spark_k8_lakehouse_spark.plans import delta_writer as dw
 
     df = spark.range(10_000).select(
         (F.col("id") % 97).alias("a"), (F.col("id") % 89).alias("b")
     )
-    t = VersionedTable(spark, str(tmp_path / "zp"))
-    t.create(df)
+    t = str(tmp_path / "zp")
+    dw.create_delta(df, t)
     # reproduce the zorder read→cluster plan without writing
-    src = t.read()
+    src = dr.read_delta(spark, t)
     probs = [i / 256 for i in range(1, 256)]
     bounds_a = src.stat.approxQuantile("a", probs, 0.01)
     arr = F.array(*[F.lit(float(x)) for x in bounds_a])

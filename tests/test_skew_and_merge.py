@@ -7,7 +7,9 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from dst_spark_k8_lakehouse_spark.operators import skew
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
+from dst_spark_k8_lakehouse_spark.plans import delta_writer as dw
+from dst_spark_k8_lakehouse_spark.plans.delta_dml import merge_delta
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
 
@@ -62,48 +64,55 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
 
 @pytest.fixture()
 def target(spark, tmp_path):
-    t = VersionedTable(spark, str(tmp_path / "tbl"))
-    t.create(
+    t = str(tmp_path / "tbl")
+    dw.create_delta(
         spark.createDataFrame(
             [Row(id=1, val="a"), Row(id=2, val="b"), Row(id=3, val="c")]
-        )
+        ),
+        t,
     )
     return t
+
+
+def _rows(spark, t):
+    return {r.id: r.val for r in dr.read_delta(spark, t).collect()}
 
 
 def test_merge_upsert(spark, target):
     source = spark.createDataFrame(
         [Row(id=2, val="B2"), Row(id=9, val="new")]
     )
-    target.merge(source, on=["id"])
-    rows = {r.id: r.val for r in target.read().collect()}
-    assert rows == {1: "a", 2: "B2", 3: "c", 9: "new"}
+    merge_delta(spark, target, source, on=["id"])
+    assert _rows(spark, target) == {1: "a", 2: "B2", 3: "c", 9: "new"}
 
 
 def test_merge_update_only(spark, target):
     source = spark.createDataFrame([Row(id=3, val="C2"), Row(id=9, val="x")])
-    target.merge(source, on=["id"], insert_when_not_matched=False)
-    rows = {r.id: r.val for r in target.read().collect()}
-    assert rows == {1: "a", 2: "b", 3: "C2"}
+    merge_delta(
+        spark, target, source, on=["id"], insert_when_not_matched=False
+    )
+    assert _rows(spark, target) == {1: "a", 2: "b", 3: "C2"}
 
 
 def test_merge_insert_only(spark, target):
     source = spark.createDataFrame([Row(id=3, val="C2"), Row(id=9, val="x")])
-    target.merge(source, on=["id"], update_when_matched=False)
-    rows = {r.id: r.val for r in target.read().collect()}
-    assert rows == {1: "a", 2: "b", 3: "c", 9: "x"}
+    merge_delta(spark, target, source, on=["id"], update_when_matched=False)
+    assert _rows(spark, target) == {1: "a", 2: "b", 3: "c", 9: "x"}
 
 
 def test_merge_rejects_duplicate_source_keys(spark, target):
     source = spark.createDataFrame([Row(id=2, val="x"), Row(id=2, val="y")])
     with pytest.raises(ValueError, match="duplicate"):
-        target.merge(source, on=["id"])
+        merge_delta(spark, target, source, on=["id"])
 
 
 def test_merge_schema_evolution(spark, target):
-    """MERGE with a new source column: schema merges, old rows NULL."""
+    """MERGE with a new source column: the column is added first
+    (metadata-only), then the upsert fills it; old rows read NULL."""
     source = spark.createDataFrame([Row(id=5, val="e", extra=1)])
-    target.merge(source, on=["id"])
-    df = target.read()
+    dw.add_column(spark, target, "extra", "long")
+    merge_delta(spark, target, source, on=["id"])
+    df = dr.read_delta(spark, target)
     assert "extra" in df.columns
     assert df.filter("extra IS NULL").count() == 3
+    assert df.filter("id = 5").head().extra == 1

@@ -151,37 +151,31 @@ def test_foreach_batch_append_sink(spark, events_dir, tmp_path):
 
 
 def test_foreach_batch_versioned_table_sink(spark, events_dir, tmp_path):
-    """Each micro-batch lands as one time-travellable snapshot."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+    """Each micro-batch lands as one time-travellable Delta commit
+    carrying its txn watermark (delta_sink.stream_to_delta)."""
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader as dr
+    from dst_spark_k8_lakehouse_spark.plans import delta_writer as dw
+    from dst_spark_k8_lakehouse_spark.streaming.delta_sink import (
+        stream_to_delta,
+    )
 
-    stream = pipelines.stream_events(spark, events_dir)
     path = str(tmp_path / "events_table")
-    pipelines.foreach_batch_to_table(stream, path, str(tmp_path / "ckpt"))
-    table = VersionedTable(spark, path)
+    dw.create_delta(
+        spark.createDataFrame([], pipelines.EVENTS_STREAM_SCHEMA), path
+    )
+    stream = pipelines.stream_events(spark, events_dir)
+    stream_to_delta(stream, path, str(tmp_path / "ckpt")).awaitTermination()
     total = spark.read.schema(pipelines.EVENTS_STREAM_SCHEMA).parquet(
         events_dir
     ).count()
-    assert table.read().count() == total
-    hist = table.history().collect()
-    assert len(hist) >= 1  # >=1 snapshot; multiple if several micro-batches
-    assert {r.operation for r in hist} <= {"CREATE", "APPEND"}
-
-
-def test_stream_batch_retry_is_idempotent(spark, tmp_path):
-    """A micro-batch replayed after a crash between the table commit
-    and the checkpoint commit must not duplicate rows: the snapshot
-    records stream_batch_id and the retry is skipped."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
-
-    path = str(tmp_path / "t")
-    batch = spark.range(10).withColumnRenamed("id", "v")
-    assert pipelines.write_stream_batch_to_table(batch, 0, path) is True
-    assert pipelines.write_stream_batch_to_table(batch, 1, path) is True
-    # retry of batch 1 (checkpoint commit lost) → skipped, no new snapshot
-    assert pipelines.write_stream_batch_to_table(batch, 1, path) is False
-    table = VersionedTable(spark, path)
-    assert table.read().count() == 20
-    assert table.history().count() == 2
+    assert dr.read_delta(spark, path).count() == total
+    hist = dr.delta_history(path)
+    assert len(hist) >= 2  # create + one commit per micro-batch
+    assert {h["operation"] for h in hist} <= {
+        "CREATE TABLE AS SELECT", "WRITE",
+    }
+    txns = dr._replay(spark, path, None)["txns"]
+    assert list(txns.values()) == [len(hist) - 2]  # last batch id
 
 
 def test_kafka_wire_parse_roundtrip(spark, events_dir):
