@@ -35,22 +35,9 @@ from dst_spark_k8_lakehouse_spark.llm.dedup import (
     spread_compute,
     with_planted_duplicates,
 )
+from dst_spark_k8_lakehouse_spark.llm.tokens import tokens
 from dst_spark_k8_lakehouse_spark.registry import query
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
-
-
-def _doc_grams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, gram) — distinct token n-grams per doc, map-only."""
-    tok = F.split(F.trim(F.lower("text")), r"\s+")
-    grams = F.expr(
-        f"transform(sequence(1, size(tok) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(tok, i, {n})))"
-    )
-    return (
-        docs.withColumn("tok", tok)
-        .filter(F.size("tok") >= n)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("gram"))
-    )
 
 
 def _doc_gram_hashes(docs: DataFrame, n: int) -> DataFrame:
@@ -107,11 +94,7 @@ def _doc_gram_hashes_sized(docs: DataFrame, n: int) -> DataFrame:
     consumer's equi-join drops."""
     return (
         docs.withColumn(
-            "tokh",
-            F.expr(
-                r"transform(split(trim(lower(text)), '\\s+'), "
-                "t -> xxhash64(t))"
-            ),
+            "tokh", F.transform(tokens("text"), lambda t: F.xxhash64(t))
         )
         .withColumn("garr", gram_hash_array(n))
         .select(
@@ -312,13 +295,12 @@ def _perturbed_mirrors(docs: DataFrame) -> DataFrame:
     analogue of ``with_planted_duplicates`` for testing
     jaccard-threshold decontamination (exact n-gram scans miss
     these once the drop lands inside the window)."""
-    tok = F.split(F.trim(F.lower("text")), r"\s+")
     kept = F.expr(
         f"filter(tok, (t, i) -> (i + 1) % {FUZZY_DROP} != 0)"
     )
     return (
         docs.filter(F.col("doc_id") % 10 == 0)
-        .withColumn("tok", tok)
+        .withColumn("tok", tokens("text"))
         .select(
             (F.col("doc_id") + DUP_OFFSET).alias("doc_id"),
             F.concat_ws(" ", kept).alias("text"),
@@ -363,15 +345,21 @@ def fuzzy_decontamination(
         verified_pairs,
     )
 
-    # corpus_sigs: reuse an existing (checkpointed) signature frame —
+    # corpus_sigs: reuse an existing, already pinned signature frame —
     # the signature stage is the dominant cost and a curation run has
-    # already computed it for the near-dup pass (same params)
+    # already computed it for the near-dup pass (same params). Frames
+    # built here feed the band join AND the verification, so they are
+    # pinned: the Python stage runs once, not once per consumer.
     sig_c = (
         corpus_sigs
         if corpus_sigs is not None
-        else signature_table(corpus, num_hashes, shingle_n, spread=spread)
+        else signature_table(
+            corpus, num_hashes, shingle_n, spread=spread
+        ).localCheckpoint(eager=False)
     )
-    sig_b = signature_table(benchmark, num_hashes, shingle_n, spread=spread)
+    sig_b = signature_table(
+        benchmark, num_hashes, shingle_n, spread=spread
+    ).localCheckpoint(eager=False)
     bands_c = banded_signatures(sig_c, num_hashes, bands)
     bands_b = F.broadcast(
         banded_signatures(sig_b, num_hashes, bands).withColumnRenamed(
@@ -443,11 +431,10 @@ def l7_fuzzy_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERTURBED text still has >= shingle_n tokens (both sides need a
     signature)."""
     flagged = l7_fuzzy_decontam(spark, sf_dir)
-    tok_n = F.size(F.split(F.trim(F.lower("text")), r"\s+"))
     expected = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
-        .withColumn("n", tok_n)
+        .withColumn("n", F.size(tokens("text")))
         .filter(
             (F.col("n") - F.floor(F.col("n") / FUZZY_DROP) >= 3)
             & (F.col("n") >= 3)

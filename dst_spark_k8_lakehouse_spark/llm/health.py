@@ -28,6 +28,7 @@ from dst_spark_k8_lakehouse_spark.llm.dedup import (
     PLANTED_SQL,
     with_planted_duplicates,
 )
+from dst_spark_k8_lakehouse_spark.llm.tokens import tokens
 from dst_spark_k8_lakehouse_spark.registry import query
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
@@ -128,10 +129,9 @@ def x3_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "transform(split(trim(text), ' '), t -> xxhash64(t))"
             ).alias("tokh"),
-            F.expr(
-                r"transform(split(trim(lower(text)), '\\s+'), "
-                r"t -> xxhash64(t))"
-            ).alias("ltokh"),
+            F.transform(tokens("text"), lambda t: F.xxhash64(t)).alias(
+                "ltokh"
+            ),
         )
         .select(
             "doc_id",

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dst_spark_k8_lakehouse_spark.llm.dedup import spread_compute
+from dst_spark_k8_lakehouse_spark.llm.tokens import tokens
 from dst_spark_k8_lakehouse_spark.registry import query
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
@@ -193,7 +194,7 @@ def l3_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     language code. One scan, k small array-intersections per row; at
     100 TB this is embarrassingly parallel with zero shuffle."""
     docs = load_table(spark, sf_dir, "documents").withColumn(
-        "tok", F.split(F.trim(F.lower("text")), r"\s+")
+        "tok", tokens("text")
     )
     scores = F.array(
         *[

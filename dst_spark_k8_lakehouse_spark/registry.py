@@ -55,6 +55,20 @@ def query(query_id: str, oracle: str | None = None) -> Callable[[F], F]:
 # ids whose only green row is the oldest (round 1). Rotation log with
 # last-green round per id lives in COVERAGE.md.
 PRIORITY: list[str] = [
+    # ---- one MinHash signature path (the size-switched all-JVM
+    # signature spelling removed, fuzzy signature frames pinned, the
+    # lowercase tokenizer defined once in llm/tokens.py): every id that
+    # computes MinHash signatures or moved onto ``tokens``.
+    "l2_minhash_lsh",
+    "l2_minhash_lsh_sigs",
+    "l2_minhash_recall",
+    "l7_fuzzy_decontam",
+    "l7_fuzzy_recall",
+    "l7_contamination",
+    "l7_contamination_scan",
+    "l3_langid",
+    "x3_corpus_health",
+    "l2_simhash_sensitivity",
     # ---- table-layer consolidation (the parquet-manifest table and its
     # SQL router retired onto the native Delta stack): every id whose
     # write/read path moved to delta_writer / delta_reader /
@@ -128,7 +142,6 @@ PRIORITY: list[str] = [
     "l6_mixture_epochs",
     "l2_embed_recall",
     "l4_ivf_recall",
-    "l3_langid",
     "l3_langid_eval",
     # 50 exactly (the three NEW r13 oracle ids — s13_kafka_group_
     # resume, t12_stateful_running_agg, t13_sessionize — took the

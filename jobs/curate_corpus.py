@@ -36,6 +36,7 @@ from dst_spark_k8_lakehouse_spark.llm import (  # noqa: E402
     curation,
     dedup,
 )
+from dst_spark_k8_lakehouse_spark.llm.tokens import tokens  # noqa: E402
 from dst_spark_k8_lakehouse_spark.metrics import MetricContext  # noqa: E402
 from dst_spark_k8_lakehouse_spark.plans import (  # noqa: E402
     delta_reader,
@@ -47,7 +48,7 @@ from dst_spark_k8_lakehouse_spark.sources.catalog import load_table  # noqa: E40
 def quality_gate(docs: DataFrame) -> DataFrame:
     """Silver rule filter (C4/Gopher-style, cf. l3_quality_score):
     token-length band + must contain a common-word token."""
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = tokens("text")
     return docs.where(
         F.size(toks).between(5, 2000)
         & (F.size(F.array_intersect(toks, F.array(F.lit("the"), F.lit("a")))) > 0)

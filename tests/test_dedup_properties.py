@@ -9,7 +9,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from dst_spark_k8_lakehouse_spark import registry
+from dst_spark_k8_lakehouse_spark import localrel, registry
 from dst_spark_k8_lakehouse_spark.llm import curation, dedup
 
 registry.load_all()
@@ -17,6 +17,12 @@ registry.load_all()
 # words: lowercase tokens so the single-space/regex tokenizers agree
 word = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
 doc = st.lists(word, min_size=0, max_size=30).map(" ".join)
+# signature docs: words followed by ASCII or non-ASCII whitespace (the
+# signature stage splits with Python ``str.split()``)
+sep = st.sampled_from([" ", "\xa0", "\u3000", "\t", "\x1c"])
+spaced_doc = st.lists(st.tuples(word, sep), min_size=0, max_size=30).map(
+    lambda ws: "".join(w + s for w, s in ws)
+)
 
 
 def _docs_df(spark, texts, n_parts):
@@ -27,7 +33,10 @@ def _docs_df(spark, texts, n_parts):
 
 @pytest.mark.usefixtures("spark")
 @settings(max_examples=10, deadline=None)
-@given(texts=st.lists(doc, min_size=1, max_size=12), n_parts=st.integers(1, 6))
+@given(
+    texts=st.lists(spaced_doc, min_size=1, max_size=12),
+    n_parts=st.integers(1, 6),
+)
 def test_minhash_signatures_partition_invariant(spark, texts, n_parts):
     """Signatures must be a pure function of the text — identical for
     any partitioning (the property that lets a cluster of any size
@@ -49,6 +58,22 @@ def test_minhash_signatures_partition_invariant(spark, texts, n_parts):
         if i in a:
             by_text.setdefault(t, set()).add(a[i])
     assert all(len(sigs) == 1 for sigs in by_text.values())
+
+
+def test_signature_splits_non_ascii_whitespace(spark):
+    """A no-break space separates tokens exactly like a space, so both
+    docs have the same two shingles and the same signature, whatever
+    the corpus size (a ``LocalRelation`` carries a small, real size
+    estimate, unlike an RDD-backed frame)."""
+    docs = localrel.local_frame(
+        spark, [(0, "a\xa0b c d"), (1, "a b c d")], "doc_id long, text string"
+    )
+    sigs = {
+        r.doc_id: (tuple(r.mh), tuple(r.shash))
+        for r in dedup.signature_table(docs).collect()
+    }
+    assert sigs[0] == sigs[1]
+    assert len(sigs[0][1]) == 2
 
 
 @pytest.mark.usefixtures("spark")
@@ -171,25 +196,3 @@ def test_quantization_roundtrip_error_bound_property(spark, vecs):
         for c, x in zip(r.codes, originals[r.vec_id]):
             assert -similarity.QUANT_LEVELS <= c <= similarity.QUANT_LEVELS
             assert abs(c * r.scale - float(x)) <= r.scale * (1 + 1e-9)
-
-
-@pytest.mark.usefixtures("spark")
-@settings(max_examples=10, deadline=None)
-@given(texts=st.lists(doc, min_size=1, max_size=12))
-def test_signature_branches_bit_identical(spark, texts):
-    """The size-switched signature spellings (_sigs_codegen JVM branch
-    vs _sigs_arrow numpy branch) must agree doc-by-doc on BOTH the
-    minhash signature and the shingle-hash set for arbitrary texts —
-    the contract that makes CODEGEN_SIG_MAX_BYTES a pure performance
-    switch (persisted SIG_VERSION state stays valid whichever branch
-    wrote it)."""
-    base = _docs_df(spark, texts, 2)
-    a = {
-        r.doc_id: (tuple(r.mh), tuple(r.shash))
-        for r in dedup._sigs_codegen(base, 32, 3).collect()
-    }
-    b = {
-        r.doc_id: (tuple(r.mh), tuple(r.shash))
-        for r in dedup._sigs_arrow(base, 32, 3).collect()
-    }
-    assert a == b

@@ -265,23 +265,32 @@ def test_stream_ingest_resumes_and_stays_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_ingest_refuses_incompatible_signature_state(spark, sf_dir, tmp_path):
-    """State written by an older minhash family (no sig_v stamp) must
-    be refused loudly — a band-join against it would silently match
-    nothing and admit duplicates."""
+    """State written by an older minhash family (no sig_v stamp, or
+    sig_v = 2 from the removed JVM signature spelling, which split
+    non-ASCII whitespace differently) must be refused loudly — a
+    band-join against it would silently match nothing and admit
+    duplicates."""
     import pytest
 
     from jobs.curate_corpus import run as curate
     from jobs.ingest_batch import run as ingest
 
     state = str(tmp_path / "state")
+    sigs = f"{state}/signatures"
     curate(spark, sf_dir, state)
-    # simulate pre-fix state: strip the version stamp
-    dw.drop_column(spark, f"{state}/signatures", "sig_v")
     batch = spark.createDataFrame(
         [(999_999, "the quick brown fox jumps over the lazy dog", "en",
           "src0", 43)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
+    # state stamped by the previous signature family
+    dw.overwrite_delta(
+        dr.read_delta(spark, sigs).withColumn("sig_v", F.lit(2)), sigs
+    )
+    with pytest.raises(ValueError, match="incompatible"):
+        ingest(spark, batch, state)
+    # simulate pre-fix state: strip the version stamp
+    dw.drop_column(spark, sigs, "sig_v")
     with pytest.raises(ValueError, match="incompatible"):
         ingest(spark, batch, state)
 

@@ -252,15 +252,20 @@ def test_unigram_logprob_broadcasts_vocab(spark, sf_dir):
 def test_fuzzy_decontam_broadcasts_benchmark_bands(spark, sf_dir):
     """Candidate generation must probe broadcast BENCHMARK bands (small
     by construction) — the corpus band table must never shuffle on the
-    band key; the signature stage is either the Arrow-vectorized
-    mapInArrow branch or (small inputs, r13 size switch) the all-JVM
-    crc32 aggregate — never row-at-a-time Python."""
+    band key; both signature frames are pinned, so the query reads
+    them from local checkpoints; the signature stage is the
+    Arrow-vectorized mapInArrow stage — never row-at-a-time Python."""
+    from dst_spark_k8_lakehouse_spark.llm import contamination, dedup
+
     plan = plan_of(registry.QUERIES["l7_fuzzy_decontam"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # one of the two bit-identical signature spellings must be present
-    assert "MapInArrow" in plan or "crc32" in plan
+    assert "at localCheckpoint" in plan
     assert "BatchEvalPython" not in plan  # never row-at-a-time Python
+    _, benchmark = contamination._fuzzy_inputs(spark, sf_dir)
+    plan = plan_of(dedup.signature_table(benchmark))
+    assert "MapInArrow" in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_x3_health_composite_stays_jvm_and_broadcasts_benchmark(
