@@ -1,9 +1,8 @@
 """The JVM lowercase whitespace tokenizer, defined once.
 
 ``tokens(col)`` is ``split(trim(lower(col)), '\\s+')``: the token array
-every Spark-side LLM operator (contamination grams, language id,
-corpus health, recall contracts, the curation quality gate) splits
-text with. The DuckDB oracles spell the same split as
+every Spark-side LLM operator splits lowercased text with. The DuckDB
+oracles spell the same split as
 ``regexp_split_to_array(trim(lower(text)), '\\s+')``. The single-space
 ``split(trim(text), ' ')`` forms elsewhere are a different,
 oracle-matched concept and do not go through here.

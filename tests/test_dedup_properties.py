@@ -63,8 +63,9 @@ def test_minhash_signatures_partition_invariant(spark, texts, n_parts):
 def test_signature_splits_non_ascii_whitespace(spark):
     """A no-break space separates tokens exactly like a space, so both
     docs have the same two shingles and the same signature, whatever
-    the corpus size (a ``LocalRelation`` carries a small, real size
-    estimate, unlike an RDD-backed frame)."""
+    the corpus size. The input is a ``LocalRelation``, so it carries a
+    small, real size estimate (an RDD-backed frame estimates as
+    huge)."""
     docs = localrel.local_frame(
         spark, [(0, "a\xa0b c d"), (1, "a b c d")], "doc_id long, text string"
     )
